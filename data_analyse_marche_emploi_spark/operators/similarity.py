@@ -377,7 +377,9 @@ def signature_rows(
     # 2.10 s min-of-4).
     if fan_out:
         n_part = df.sparkSession.sparkContext.defaultParallelism
-        if src.rdd.getNumPartitions() < n_part:
+        # the JVM-side RDD: ``src.rdd`` would build a Python RDD
+        # (a pickling map over every row) just to count partitions
+        if src._jdf.rdd().getNumPartitions() < n_part:
             src = src.repartition(n_part)
     return src.mapInPandas(sigs, out_schema)
 

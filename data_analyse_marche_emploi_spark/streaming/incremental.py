@@ -31,43 +31,8 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-def _events_raw_schema(ts_is_nanos: bool) -> T.StructType:
-    """Physical schema of the events fixture (streaming file sources
-    require an explicit schema — there is no inference at plan time).
-
-    The fixture's ``ts`` has shipped in two physical forms: parquet
-    TIMESTAMP(NANOS) — which, under
-    spark.sql.legacy.parquet.nanosAsLong=true, surfaces as
-    nanos-since-epoch BIGINT — and plain TIMESTAMP(MICROS,
-    isAdjustedToUTC=false), which surfaces as TIMESTAMP_NTZ. Forcing the
-    BIGINT schema onto a micros file silently reads micros-as-nanos (a
-    1000x shrink), so the schema must follow the file's footer.
-    """
-    ts_type = T.LongType() if ts_is_nanos else T.TimestampNTZType()
-    return T.StructType(
-        [
-            T.StructField("event_id", T.LongType()),
-            T.StructField("ts", ts_type),
-            T.StructField("user_id", T.LongType()),
-            T.StructField("event_type", T.StringType()),
-            T.StructField("value", T.DoubleType()),
-            T.StructField("props", T.StringType()),
-        ]
-    )
-
-
-def _events_ts_is_nanos(sf_dir: str) -> bool:
-    """Sniff the parquet footer: True iff ``ts`` is TIMESTAMP(NANOS)."""
-    import pyarrow.parquet as pq
-    import pyarrow.types as pat
-
-    schema = pq.ParquetFile(os.path.join(sf_dir, "events.parquet")).schema_arrow
-    return pat.is_timestamp(schema.field("ts").type) and (
-        schema.field("ts").type.unit == "ns"
-    )
-
+from .. import tables
 
 _STAGED_DIRS: dict[str, str] = {}
 
@@ -93,16 +58,17 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     micros fixtures pass through — so streaming results compare equal to
     batch.
     """
-    ts_is_nanos = _events_ts_is_nanos(sf_dir)
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    # streaming file sources require an explicit schema: the batch
+    # loader's declaration, following the same footer sniff
+    schema, ts_is_nanos = tables.events_read_schema(spark, sf_dir)
     raw = (
-        spark.readStream.schema(_events_raw_schema(ts_is_nanos))
+        spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(_stage_as_dir(sf_dir))
     )
     if ts_is_nanos:
-        raw = raw.withColumn("ts", F.expr("timestamp_micros(ts DIV 1000)"))
+        raw = tables.floor_nanos_ts(raw)
     else:
         # withWatermark rejects TIMESTAMP_NTZ; under the UTC-pinned
         # session this cast preserves the wall-clock value exactly.
