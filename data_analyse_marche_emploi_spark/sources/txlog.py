@@ -69,6 +69,50 @@ __all__ = [
 ]
 
 _LOG_DIR = "_txlog"
+# a path with a scheme (``s3://``, ``file://``): not a local file path
+_URI = re.compile(r"[A-Za-z][A-Za-z0-9+.-]*://")
+
+
+# footer key under which Spark's parquet writer records the row schema
+_SPARK_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _parquet_read_schema(paths: list[str]):
+    """The schema ``spark.read.parquet(*paths)`` infers with
+    mergeSchema off, from one footer read on the driver instead of a
+    Spark job. Spark's rule (``ParquetUtils.splitFiles`` sorts the
+    paths; ``ParquetFileFormat.readSchemaFromFooter``): only the
+    smallest path's footer is read; its Spark row-metadata JSON is the
+    schema when present (every Spark-written part), else its parquet
+    schema is converted (pyarrow-written parts; INT64 timestamps
+    without UTC adjustment read as TIMESTAMP_NTZ, Spark's
+    ``inferTimestampNTZ`` default). A file source then reads every
+    field nullable. Nothing is cached: every call reads its footer."""
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    pf = pq.ParquetFile(min(paths))
+    row = (pf.metadata.metadata or {}).get(_SPARK_ROW_METADATA)
+    if row is not None:
+        schema = T.StructType.fromJson(json.loads(row))
+    else:
+        schema = from_arrow_schema(pf.schema_arrow, prefer_timestamp_ntz=True)
+    return _as_nullable(schema)
+
+
+def _as_nullable(dt):
+    """Spark's ``DataType.asNullable``: every field, element and map
+    value nullable, field metadata kept."""
+    if isinstance(dt, T.StructType):
+        return T.StructType([
+            T.StructField(f.name, _as_nullable(f.dataType), True, f.metadata)
+            for f in dt.fields
+        ])
+    if isinstance(dt, T.ArrayType):
+        return T.ArrayType(_as_nullable(dt.elementType), True)
+    if isinstance(dt, T.MapType):
+        return T.MapType(_as_nullable(dt.keyType), _as_nullable(dt.valueType), True)
+    return dt
 
 
 def _footer_pool_map(fn, names, local: bool = True):
@@ -83,9 +127,9 @@ def _footer_pool_map(fn, names, local: bool = True):
     threads genuinely overlap. On LOCAL files the pool measurably
     HURTS (r15 A/B, 200-part commit: sequential 0.021 s vs pooled
     0.113 s for _file_stats — page-cached footers cost ~0.1 ms each,
-    below thread-pool startup + GIL handoff), so the shipped
-    process-local stores take the sequential path and only a custom
-    (presumed remote) FileStore pays the pool."""
+    below thread-pool startup + GIL handoff), so stores flagged
+    ``FileStore.process_local`` take the sequential path and only a
+    presumed-remote FileStore pays the pool."""
     names = list(names)
     if local or len(names) <= 2:
         return [fn(n) for n in names]
@@ -398,7 +442,16 @@ class FileStore:
     :class:`TxTable` itself does — create/append/merge/delete/
     optimize/restore/vacuum/checkpoint/read — is store-routed and
     proven over the dict-backed fake by the tests/test_txlog.py
-    matrix."""
+    matrix.
+
+    ``process_local`` is the store's one capability flag: True when
+    ``read_path`` resolves to files already on this host, so a footer
+    read costs a page-cache hit and the driver reads footers
+    sequentially (see :func:`_footer_pool_map`). A store that fetches
+    on ``read_path`` (an object store behind a local cache) leaves it
+    False and gets the footer pool."""
+
+    process_local = False
 
     def put(self, table_path: str, name: str, local_src: str) -> None:
         """Publish the locally-staged file ``local_src`` as part
@@ -431,7 +484,11 @@ class FileStore:
         raise NotImplementedError
 
     def read_path(self, table_path: str, name: str) -> str:
-        """A path/URI the reading engine can open for this part."""
+        """A local file path for this part. It must be locally
+        openable: the driver opens parquet footers itself (commit
+        stats, row counts, the declared schema of every scan), so a
+        store of remote objects returns the path of a local copy.
+        A URI (``s3://...``) is refused before any footer read."""
         raise NotImplementedError
 
 
@@ -439,6 +496,8 @@ class PosixFileStore(FileStore):
     """Default store: parts live directly in the table root (the
     historical layout) — ``put`` is one same-filesystem rename, reads
     are zero-copy."""
+
+    process_local = True
 
     def put(self, table_path: str, name: str, local_src: str) -> None:
         os.replace(local_src, os.path.join(table_path, name))
@@ -476,6 +535,8 @@ class InMemoryFileStore(FileStore):
     matrix over it (tests/test_txlog.py ``memfs`` mode), which proves
     every driver-side part touch goes through the seam; the task-side
     DSv2 writer path stays POSIX there (see :class:`FileStore`)."""
+
+    process_local = True
 
     def __init__(self):
         import tempfile
@@ -1517,13 +1578,21 @@ class TxTable:
                 "max_matched_fraction to force DV anyway"
             )
 
-    def _local_store(self) -> bool:
-        """True when the FileStore is one of the shipped process-local
-        implementations — their read_path round-trips are page-cache
-        cheap and the footer pool would only add overhead (see
-        _footer_pool_map). A custom store (object-store deployment)
-        gets the threaded path."""
-        return type(self.file_store) in (PosixFileStore, InMemoryFileStore)
+    def _local_path(self, name: str) -> str:
+        """``file_store.read_path`` of a part the driver opens itself
+        (a parquet footer or a scan's declared schema). A URI fails
+        here, naming the store, before any footer read: see
+        :meth:`FileStore.read_path`."""
+        path = self.file_store.read_path(self.path, name)
+        if _URI.match(path):
+            raise ValueError(
+                f"{type(self.file_store).__name__}.read_path returned "
+                f"{path!r} for part {name!r}, which is not a locally "
+                "openable path: txlog reads parquet footers on the "
+                "driver, so read_path must return a local file (a "
+                "local copy of a remote object)"
+            )
+        return path
 
     def _parts_rows(self, names) -> int:
         """Summed row count of already-written parts, from their
@@ -1537,19 +1606,14 @@ class TxTable:
         (:func:`_footer_pool_map`) — a merge writing thousands of
         parts must not serialize O(files) metadata round-trips inside
         the commit critical section (r15; pyarrow releases the GIL on
-        footer IO/parse). NOTE: ``file_store.read_path`` must return a
-        locally-openable path for this call (true for both shipped
-        stores; an object-store FileStore whose read_path returns
-        ``s3://...`` URIs needs a filesystem-aware override here)."""
+        footer IO/parse)."""
         import pyarrow.parquet as pq
 
         return sum(
             _footer_pool_map(
-                lambda n: pq.ParquetFile(
-                    self.file_store.read_path(self.path, n)
-                ).metadata.num_rows,
-                names,
-                local=self._local_store(),
+                lambda p: pq.ParquetFile(p).metadata.num_rows,
+                [self._local_path(n) for n in names],
+                local=self.file_store.process_local,
             )
         )
 
@@ -1568,8 +1632,7 @@ class TxTable:
         pvals = self._last_partition_values
         bloom_cols = self.bloom_by()
 
-        def _one(name: str) -> dict:
-            local = self.file_store.read_path(self.path, name)
+        def _one(local: str) -> dict:
             md = pq.ParquetFile(local).metadata
             # Reserved key: per-file row count (Delta's add.stats
             # numRecords analog) — what makes count() metadata-only.
@@ -1634,8 +1697,10 @@ class TxTable:
         # consumed exactly once per commit, so a long-lived handle
         # doesn't accumulate per-part entries forever.
         out: dict[str, dict] = {}
+        paths = [self._local_path(n) for n in names]
         for name, cols in zip(
-            names, _footer_pool_map(_one, names, local=self._local_store())
+            names,
+            _footer_pool_map(_one, paths, local=self.file_store.process_local),
         ):
             if name in pvals:
                 cols["__partition__"] = pvals.pop(name)
@@ -1689,29 +1754,44 @@ class TxTable:
                          "bloom_by": t._bloom_cols})
         return t
 
-    def write_schema(self):
-        """The table's current WRITE schema as a Spark StructType —
-        derived from the newest live file's parquet footer (the same
-        binding rule the registered DataSource's ``schema()`` uses:
-        the newest ADD still live is the current write schema by
-        construction); None for a zero-file snapshot. One footer read,
-        driver-side — usable with or without a session (the DSv2
-        writer's commit hook has none)."""
+    def write_schema(self, version: int | None = None):
+        """The table's WRITE schema at ``version`` (default latest) as
+        a Spark StructType — derived from the newest live file's
+        parquet footer (the binding rule the registered DataSource's
+        ``schema()`` shares: the newest ADD still live is the current
+        write schema by construction); None for a zero-file snapshot.
+        One footer read, driver-side — usable with or without a
+        session (the DSv2 writer's commit hook has none)."""
         import pyarrow.parquet as pq
         from pyspark.sql.pandas.types import from_arrow_schema
 
-        live = self.snapshot_files()
+        live = self.snapshot_files(version)
         if not live:
             return None
         last_live = set(live)
         newest = None
         for v in reversed(self._versions()):
+            if version is not None and v > version:
+                continue
             adds = [f for f in self._read_action(v)["adds"] if f in last_live]
             if adds:
                 newest = adds[-1]
                 break
-        f = self.file_store.read_path(self.path, newest or live[-1])
+        f = self._local_path(newest or live[-1])
         return from_arrow_schema(pq.ParquetFile(f).schema_arrow)
+
+    def _schema_file(self) -> str:
+        """A part that carries the table's row schema when the snapshot
+        has no file (an all-rows delete can leave zero files): the
+        first data file still in the store. Logically-removed files
+        serve fine, only vacuum drops them; delete-key and
+        deletion-vector parts never serve, their rows are index rows."""
+        for f in sorted(self.file_store.list(self.path)):
+            if not f.startswith(("delete-", "dv-")):
+                return f
+        raise FileNotFoundError(
+            f"empty snapshot and no schema-bearing files at {self.path}"
+        )
 
     @staticmethod
     def _norm_nullability(dt):
@@ -2898,27 +2978,27 @@ class TxTable:
     def _read_files(
         self, names: list[str], merge_schema: bool = False
     ) -> DataFrame:
+        """A scan of the parts ``names`` with the schema Spark would
+        infer declared up front, so building it runs no Spark job.
+        Spark's rule with mergeSchema off reads ONE footer, that of
+        the smallest path (``splitFiles`` sorts them): its
+        ``org.apache.spark.sql.parquet.row.metadata`` JSON is the
+        schema when present, else its parquet schema, converted; every
+        field then reads nullable. See :func:`_parquet_read_schema`.
+        ``merge_schema=True`` leaves the merge of every footer to
+        Spark's own job. A zero-file snapshot reads as an empty scan
+        of :meth:`_schema_file`."""
         if not names:
-            # An all-rows delete can leave a snapshot with ZERO files
-            # (an empty rewrite may write no parts under AQE
-            # coalescing). Derive the schema from any data file still
-            # in the store — logically-removed files serve fine, they
-            # are only ever physically dropped by vacuum.
-            for f in sorted(self.file_store.list(self.path)):
-                # delete-key and deletion-vector parts don't share the
-                # table's row schema — never derive it from one
-                if not f.startswith(("delete-", "dv-")):
-                    return self.spark.read.parquet(
-                        self.file_store.read_path(self.path, f)
-                    ).limit(0)
-            raise FileNotFoundError(
-                f"empty snapshot and no schema-bearing files at {self.path}"
-            )
-        paths = [self.file_store.read_path(self.path, n) for n in names]
-        reader = self.spark.read
+            return self._scan([self._local_path(self._schema_file())]).limit(0)
+        paths = [self._local_path(n) for n in names]
         if merge_schema:
-            reader = reader.option("mergeSchema", "true")
-        return reader.parquet(*paths)
+            return self.spark.read.option("mergeSchema", "true").parquet(*paths)
+        return self._scan(paths)
+
+    def _scan(self, paths: list[str]) -> DataFrame:
+        """``spark.read.parquet(*paths)`` (mergeSchema off) with its
+        schema read from a footer on the driver, not by a Spark job."""
+        return self.spark.read.schema(_parquet_read_schema(paths)).parquet(*paths)
 
     def _dv_rows(self, dv_map: dict, files: list[str]) -> DataFrame:
         """The (file, pos) deletion rows covering ``files`` under
@@ -2935,9 +3015,9 @@ class TxTable:
                 by_part.setdefault(d, []).append(f)
         out = None
         for d, fs in sorted(by_part.items()):
-            rows = self.spark.read.parquet(
-                self.file_store.read_path(self.path, d)
-            ).filter(F.col("file").isin(fs)).select("file", "pos")
+            rows = self._scan([self._local_path(d)]).filter(
+                F.col("file").isin(fs)
+            ).select("file", "pos")
             out = rows if out is None else out.unionByName(rows)
         return out
 
@@ -3216,9 +3296,7 @@ class TxTable:
                 if k != key:
                     continue
                 dfiles.append(f)
-                d = self.spark.read.parquet(
-                    self.file_store.read_path(self.path, f)
-                ).select(
+                d = self._scan([self._local_path(f)]).select(
                     F.col(key).alias("__dk"), F.lit(dv).alias("__dv")
                 )
                 dk = d if dk is None else dk.unionByName(d)
@@ -3390,14 +3468,11 @@ class TxTable:
                         f"merge key; the delete files name keys in "
                         f"that column only), got {key!r}"
                     )
-                locals_ = [
-                    self.file_store.read_path(self.path, f)
-                    for f in act["delete_adds"]
-                ]
+                locals_ = [self._local_path(f) for f in act["delete_adds"]]
                 # ONE multi-path scan, not a union per delete file — a
                 # merge that staged many key parts must not bloat the
                 # plan linearly in file count
-                dk = spark.read.parquet(*locals_).select(key)
+                dk = self._scan(locals_).select(key)
                 kmin = kmax = None
                 ranged = True
                 for local in locals_:
@@ -5881,44 +5956,19 @@ class TxLogDataSource(DataSource):
         # *.parquet in the table root: the root also holds
         # logically-removed pre-merge/pre-optimize files, and a
         # uuid-sorted glob could pick an old schema generation after
-        # schema-evolving appends (r7 advisor finding). The newest ADD
-        # still live is the current write schema by construction.
-        path = _path_option(self.options)
-        t = TxTable(None, path)
-        asof = _resolve_asof_version(t, self.options)
-        live = t.snapshot_files(asof)
-        if live:
-            last_live = set(live)
-            newest = None
-            for v in reversed(t._versions()):
-                if asof is not None and v > asof:
-                    continue
-                adds = [f for f in t._read_action(v)["adds"] if f in last_live]
-                if adds:
-                    newest = adds[-1]
-                    break
-            f = t.file_store.read_path(path, newest or live[-1])
-            full = from_arrow_schema(pq.ParquetFile(f).schema_arrow)
-            # refuse float rangeFilter columns BEFORE the columns
-            # projection drops them from the reader schema (r14)
-            _refuse_float_range(
-                _parse_range_option(self.options), full
-            )
-            return self._prune_schema(full)
-        # Zero-file snapshot (all rows deleted): fall back to any
-        # schema-bearing file still in the store, same rule as
-        # TxTable._read_files (delete-key / deletion-vector parts
-        # don't carry the row schema).
-        for name in sorted(t.file_store.list(path)):
-            if name.startswith(("delete-", "dv-")):
-                continue
-            f = t.file_store.read_path(path, name)
+        # schema-evolving appends (r7 advisor finding).
+        t = TxTable(None, _path_option(self.options))
+        full = t.write_schema(_resolve_asof_version(t, self.options))
+        if full is None:
+            # zero-file snapshot (all rows deleted)
+            f = t._local_path(t._schema_file())
             return self._prune_schema(
                 from_arrow_schema(pq.ParquetFile(f).schema_arrow)
             )
-        raise FileNotFoundError(
-            f"no schema-bearing data files under {self.options['path']}"
-        )
+        # refuse float rangeFilter columns BEFORE the columns
+        # projection drops them from the reader schema (r14)
+        _refuse_float_range(_parse_range_option(self.options), full)
+        return self._prune_schema(full)
 
     def reader(self, schema: T.StructType) -> TxLogBatchReader:
         return TxLogBatchReader(schema, self.options)

@@ -1,5 +1,7 @@
 import os
 import sys
+import time
+import uuid
 
 import pytest
 
@@ -93,3 +95,22 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_SMOKE
+
+
+def jobs_in_group(spark, fn) -> int:
+    """Spark jobs launched by ``fn()``, counted under a fresh job group.
+    A one-job sentinel closes the group: listener events arrive in
+    order, so once the sentinel is visible every earlier job is too."""
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+        sc.parallelize([0], 1).count()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    deadline = time.monotonic() + 30
+    while not (ids := sc.statusTracker().getJobIdsForGroup(group)):
+        assert time.monotonic() < deadline, "sentinel job never reported"
+        time.sleep(0.05)
+    return len(ids) - 1

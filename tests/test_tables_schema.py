@@ -7,8 +7,6 @@ from __future__ import annotations
 
 import glob
 import os
-import time
-import uuid
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -17,7 +15,7 @@ from pyspark.sql import functions as F
 
 from data_analyse_marche_emploi_spark import tables
 from data_analyse_marche_emploi_spark.streaming import incremental as S
-from tests.conftest import SF_SMOKE
+from tests.conftest import SF_SMOKE, jobs_in_group
 
 SF_DIRS = sorted(glob.glob(os.path.join(os.path.dirname(SF_SMOKE), "sf*")))
 
@@ -59,25 +57,6 @@ def test_declared_schema_equals_footer(spark, sf_dir, name):
     assert tables.load_table(spark, sf_dir, name).schema == inferred
 
 
-def _jobs_in_group(spark, fn) -> int:
-    """Spark jobs launched by ``fn()``, counted under a fresh job group.
-    A one-job sentinel closes the group: listener events arrive in
-    order, so once the sentinel is visible every earlier job is too."""
-    sc = spark.sparkContext
-    group = f"load-table-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        fn()
-        sc.parallelize([0], 1).count()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    deadline = time.monotonic() + 30
-    while not (ids := sc.statusTracker().getJobIdsForGroup(group)):
-        assert time.monotonic() < deadline, "sentinel job never reported"
-        time.sleep(0.05)
-    return len(ids) - 1
-
-
 def test_load_table_runs_no_spark_job(spark, nanos_dir):
     def load_all():
         for sf_dir in SF_DIRS:
@@ -85,10 +64,10 @@ def test_load_table_runs_no_spark_job(spark, nanos_dir):
                 tables.load_table(spark, sf_dir, name)
         tables.load_table(spark, nanos_dir, "events")
 
-    assert _jobs_in_group(spark, load_all) == 0
+    assert jobs_in_group(spark, load_all) == 0
     # the counter does see a schema-inference scan
     fixture = os.path.join(nanos_dir, "events.parquet")
-    assert _jobs_in_group(spark, lambda: spark.read.parquet(fixture)) >= 1
+    assert jobs_in_group(spark, lambda: spark.read.parquet(fixture)) >= 1
 
 
 def _ts_strings(df) -> list[str]:

@@ -5491,10 +5491,10 @@ def test_pending_delete_checks_bind_one_version(spark, tmp_path):
 
 def test_footer_pool_custom_store_matches_sequential(spark, tmp_path):
     """r15: commit-path footer metadata lifts (_file_stats /
-    _parts_rows) run on a thread pool only for CUSTOM FileStores
-    (presumed remote); the shipped process-local stores take the
-    measured-faster sequential path. The pooled path must return
-    byte-identical stats in input order."""
+    _parts_rows) run on a thread pool only for FileStores not flagged
+    ``process_local`` (presumed remote); the shipped process-local
+    stores take the measured-faster sequential path. The pooled path
+    must return byte-identical stats in input order."""
     from pyspark.sql import functions as F
 
     from data_analyse_marche_emploi_spark.sources.txlog import (
@@ -5503,20 +5503,22 @@ def test_footer_pool_custom_store_matches_sequential(spark, tmp_path):
     )
 
     class SlowishStore(PosixFileStore):
-        """Custom subclass: type check routes it to the pool."""
+        """Custom subclass flagged remote: routed to the pool."""
+
+        process_local = False
 
     d = str(tmp_path / "t")
     rows = spark.range(0, 5000).select(
         F.col("id").alias("k"), (F.col("id") % 7 * 1.5).alias("p")
     ).repartition(8)
     t = TxTable.create(spark, d, rows, file_store=SlowishStore())
-    assert not t._local_store()
+    assert not t.file_store.process_local
     names = sorted(t.snapshot_files())
     pooled = t._file_stats(names)
     assert t._parts_rows(names) == 5000
     # sequential reference from a posix-store handle on the same files
     t2 = TxTable(spark, d)
-    assert t2._local_store()
+    assert t2.file_store.process_local
     seq = t2._file_stats(names)
     assert pooled == seq
     assert list(pooled) == names  # input order preserved

@@ -1,0 +1,246 @@
+"""Every txlog scan declares the schema ``spark.read.parquet`` would
+infer (``txlog._parquet_read_schema``: one footer read on the driver),
+so table reads and DML build their DataFrames without a
+schema-inference job. The declaration is pinned here against Spark's
+own inference for every kind of part the engine scans, and each DML
+op's job count is pinned so an inference job cannot creep back."""
+
+from __future__ import annotations
+
+import os
+import random
+
+import pyarrow as pa
+import pyarrow.parquet as pq
+import pytest
+from pyspark.sql import functions as F
+
+from data_analyse_marche_emploi_spark import tables
+from data_analyse_marche_emploi_spark.sources.txlog import (
+    FileStore,
+    InMemoryFileStore,
+    PosixFileStore,
+    TxTable,
+    _parquet_read_schema,
+    register_txlog_source,
+)
+from tests.conftest import SF_SMOKE, jobs_in_group
+
+COLUMNS = (
+    "k long, d date, ts timestamp, ntz timestamp_ntz, dec decimal(12,2), "
+    "nested struct<a:int,tags:array<string>>, m map<string,int>"
+)
+
+
+def _rows(spark, keys):
+    return spark.sql(
+        "SELECT id AS k, date_add(date'2024-01-01', CAST(id AS INT)) AS d, "
+        "timestamp'2024-01-01 00:00:00.123456' + make_interval(0, 0, 0, 0, 0, 0, id) AS ts, "
+        "timestamp_ntz'2024-01-01 00:00:00' + make_interval(0, 0, 0, 0, id) AS ntz, "
+        "CAST(id / 4 AS decimal(12,2)) AS dec, "
+        "named_struct('a', CAST(id AS INT), 'tags', array(CAST(id AS STRING))) AS nested, "
+        f"map('v', CAST(id AS INT)) AS m FROM range({keys.start}, {keys.stop})"
+    )
+
+
+def _dv_parts(t):
+    """The dv parts the latest commit wrote."""
+    return [
+        d if isinstance(d, str) else d[-1]
+        for d in t._read_action(t.latest_version())["dv"].values()
+    ]
+
+
+@pytest.fixture(scope="module")
+def parts(spark, tmp_path_factory):
+    """One table holding every kind of part the engine scans, as
+    ``{kind: [local paths]}``."""
+    register_txlog_source(spark)
+    p = str(tmp_path_factory.mktemp("kinds") / "t")
+    t = TxTable.create(spark, p, _rows(spark, range(0, 40)).coalesce(2))
+    t.delete_where("k % 7 = 0", mode="dv", max_matched_fraction=1.0)
+    spark_dv = _dv_parts(t)
+    # one file's positions split across staged files, then coalesced
+    # by pyarrow into its single dv part
+    spark.conf.set("spark.sql.files.maxRecordsPerFile", "1")
+    try:
+        t.delete_where("k % 5 = 1", mode="dv", max_matched_fraction=1.0)
+    finally:
+        spark.conf.unset("spark.sql.files.maxRecordsPerFile")
+    coalesced = _dv_parts(t)
+    # the DSv2 writer's parts: a table it creates (its append check
+    # reads a timestamp_ntz column back as timestamp and refuses)
+    p2 = p + "_dsv2"
+    _rows(spark, range(100, 110)).write.format("txlog").option(
+        "path", p2
+    ).mode("append").save()
+    t2 = TxTable(spark, p2)
+    t.merge_upsert(_rows(spark, range(30, 50)), key="k", mode="mor")
+    merge = t._read_action(t.latest_version())
+    kinds = {
+        "data": t._read_action(0)["adds"] + merge["adds"],
+        "delete": merge["delete_adds"],
+        "dv": spark_dv,
+        "dv_coalesced": coalesced,
+    }
+    out = {k: [t._local_path(n) for n in names] for k, names in kinds.items()}
+    out["dsv2"] = [t2._local_path(n) for n in t2.snapshot_files()]
+    writers = {
+        k: {pq.ParquetFile(f).metadata.created_by.split()[0] for f in fs}
+        for k, fs in out.items()
+    }
+    # the kinds really are what they are named for
+    assert writers == {
+        "data": {"parquet-mr"},
+        "delete": {"parquet-mr"},
+        "dv": {"parquet-mr"},
+        "dv_coalesced": {"parquet-cpp-arrow"},
+        "dsv2": {"parquet-cpp-arrow"},
+    }
+    assert all(out.values())
+    return out
+
+
+@pytest.mark.parametrize(
+    "kind", ["data", "delete", "dv", "dv_coalesced", "dsv2"]
+)
+def test_declared_schema_equals_inferred(spark, parts, kind):
+    for path in parts[kind]:
+        assert _parquet_read_schema([path]) == spark.read.parquet(path).schema
+
+
+def test_declared_schema_covers_the_column_types(spark, parts):
+    want = spark.createDataFrame([], COLUMNS).schema
+    for kind in ("data", "dsv2"):
+        assert _parquet_read_schema(parts[kind]) == want
+
+
+def test_multi_path_scan_reads_the_smallest_path(spark, parts):
+    paths = [p for fs in parts.values() for p in fs]
+    random.Random(7).shuffle(paths)
+    assert _parquet_read_schema(paths) == spark.read.parquet(*paths).schema
+
+
+def test_non_merge_scan_of_differing_files(spark, tmp_path):
+    """Files whose schemas differ: Spark infers from the smallest path
+    only, whatever order the paths come in."""
+    small = str(tmp_path / "a.parquet")
+    large = str(tmp_path / "b.parquet")
+    pq.write_table(pa.table({"x": pa.array([1], pa.int64())}), small)
+    spark.createDataFrame([(1, "s")], "y long, z string").coalesce(1).write.parquet(
+        str(tmp_path / "stage")
+    )
+    (staged,) = [
+        f for f in os.listdir(tmp_path / "stage") if f.endswith(".parquet")
+    ]
+    os.replace(tmp_path / "stage" / staged, large)
+    for paths in ([small, large], [large, small]):
+        declared = _parquet_read_schema(paths)
+        assert declared == spark.read.parquet(*paths).schema
+        assert declared.names == ["x"]
+
+
+def test_declared_schema_keeps_field_metadata(spark, tmp_path):
+    d = str(tmp_path / "m")
+    spark.range(2).coalesce(1).select(
+        F.col("id").alias("k", metadata={"comment": "key"})
+    ).write.parquet(d)
+    (name,) = [f for f in os.listdir(d) if f.endswith(".parquet")]
+    path = os.path.join(d, name)
+    declared = _parquet_read_schema([path])
+    assert declared == spark.read.parquet(path).schema
+    assert declared["k"].metadata == {"comment": "key"}
+
+
+def test_table_read_uses_the_declared_schema(spark, parts):
+    """What TxTable scans equals Spark's inference over the same parts,
+    merge_schema off and on."""
+    t = TxTable(spark, os.path.dirname(parts["data"][0]))
+    names = t.snapshot_files()
+    paths = [t._local_path(n) for n in names]
+    assert t._read_files(names).schema == spark.read.parquet(*paths).schema
+    merged = spark.read.option("mergeSchema", "true").parquet(*paths).schema
+    assert t._read_files(names, merge_schema=True).schema == merged
+
+
+# -- job budget ----------------------------------------------------------------
+
+KEY = "o_orderkey"
+# build-phase Spark jobs per op, on a table with pending deletion
+# vectors and equality deletes when it is read
+JOB_BUDGET = {
+    "append": 1,
+    "merge_cow": 10,
+    "delete_dv": 2,
+    "update_dv": 5,
+    "merge_mor": 7,
+    "read": 0,
+    "optimize": 5,
+}
+
+
+def test_txlog_op_job_budget(spark, tmp_path):
+    """One DML cycle of the txlog benchmark workload, on the orders
+    fixture: each op launches exactly its budgeted jobs."""
+    orders = tables.load_table(spark, SF_SMOKE, "orders").withColumn(
+        "o_orderdate", F.col("o_orderdate").cast("date")
+    )
+
+    def keys(lo, hi, shift=0, price=0.0):
+        df = orders.filter((F.col(KEY) >= lo) & (F.col(KEY) < hi))
+        return df.withColumn(KEY, F.col(KEY) + shift).withColumn(
+            "o_totalprice", F.col("o_totalprice") + price
+        )
+
+    t = TxTable.create(spark, str(tmp_path / "t"), keys(0, 1000))
+    ops = {
+        "append": lambda: t.append(keys(1000, 1100, shift=10**7)),
+        "merge_cow": lambda: t.merge_upsert(
+            keys(100, 300, price=1.0), key=KEY, mode="cow"
+        ),
+        "delete_dv": lambda: t.delete_where(f"{KEY} % 97 = 3", mode="dv"),
+        "update_dv": lambda: t.update_where(
+            f"{KEY} % 89 = 5", {"o_orderpriority": "'1-URGENT'"}, mode="dv"
+        ),
+        "merge_mor": lambda: t.merge_upsert(
+            keys(500, 700, price=2.0), key=KEY, mode="mor"
+        ),
+        "read": t.read,
+        "optimize": t.optimize,
+    }
+    jobs = {name: jobs_in_group(spark, op) for name, op in ops.items()}
+    assert jobs == JOB_BUDGET
+
+
+# -- FileStore capability flag -------------------------------------------------
+
+
+def test_process_local_flag():
+    assert not FileStore.process_local
+    assert PosixFileStore.process_local
+    assert InMemoryFileStore.process_local
+
+
+def test_uri_read_path_fails_before_any_footer_read(spark, tmp_path, monkeypatch):
+    class UriStore(PosixFileStore):
+        process_local = False
+
+        def read_path(self, table_path, name):
+            return f"s3://bucket/{name}"
+
+    p = str(tmp_path / "t")
+    TxTable.create(spark, p, spark.range(3).withColumnRenamed("id", "k"))
+    t = TxTable(spark, p, file_store=UriStore())
+
+    def no_footer(*a, **k):
+        raise AssertionError("footer read before the path check")
+
+    monkeypatch.setattr(pq, "ParquetFile", no_footer)
+    monkeypatch.setattr(pq, "read_table", no_footer)
+    for op in (
+        t.read,
+        t.write_schema,
+        lambda: t.append(spark.range(3, 5).withColumnRenamed("id", "k")),
+    ):
+        with pytest.raises(ValueError, match="UriStore.read_path returned 's3://"):
+            op()
