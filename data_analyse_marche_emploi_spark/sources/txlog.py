@@ -100,6 +100,14 @@ def _parquet_read_schema(paths: list[str]):
     return _as_nullable(schema)
 
 
+def _lookup(mapping: dict, key):
+    """``mapping[key]`` for a Column ``key``, from a literal map, which
+    Spark searches linearly per evaluated row."""
+    return F.element_at(
+        F.create_map(*[F.lit(x) for kv in mapping.items() for x in kv]), key
+    )
+
+
 def _as_nullable(dt):
     """Spark's ``DataType.asNullable``: every field, element and map
     value nullable, field metadata kept."""
@@ -488,7 +496,9 @@ class FileStore:
         openable: the driver opens parquet footers itself (commit
         stats, row counts, the declared schema of every scan), so a
         store of remote objects returns the path of a local copy.
-        A URI (``s3://...``) is refused before any footer read."""
+        A URI (``s3://...``) is refused before any footer read. The
+        path's file name must be ``name``: deletion vectors record
+        row positions by the ``_metadata.file_name`` a scan reports."""
         raise NotImplementedError
 
 
@@ -1761,10 +1771,9 @@ class TxTable:
         ``schema()`` shares: the newest ADD still live is the current
         write schema by construction); None for a zero-file snapshot.
         One footer read, driver-side — usable with or without a
-        session (the DSv2 writer's commit hook has none)."""
-        import pyarrow.parquet as pq
-        from pyspark.sql.pandas.types import from_arrow_schema
-
+        session (the DSv2 writer's commit hook has none) — converted
+        the way a scan declares it (:func:`_parquet_read_schema`), so
+        a ``timestamp_ntz`` column reads back as ``timestamp_ntz``."""
         live = self.snapshot_files(version)
         if not live:
             return None
@@ -1777,8 +1786,7 @@ class TxTable:
             if adds:
                 newest = adds[-1]
                 break
-        f = self._local_path(newest or live[-1])
-        return from_arrow_schema(pq.ParquetFile(f).schema_arrow)
+        return _parquet_read_schema([self._local_path(newest or live[-1])])
 
     def _schema_file(self) -> str:
         """A part that carries the table's row schema when the snapshot
@@ -1797,9 +1805,9 @@ class TxTable:
     def _norm_nullability(dt):
         """``dt`` with every NESTED nullable/containsNull/
         valueContainsNull flag rewritten to True. Spark's DataType
-        equality includes those flags, and the parquet→arrow→
-        from_arrow_schema roundtrip in :meth:`write_schema` can flip
-        them for struct/array/map columns — so without normalizing, a
+        equality includes those flags, and :meth:`write_schema` reads
+        every one of them nullable while an incoming DataFrame's
+        struct/array/map columns may not be — so without normalizing, a
         legitimate append to a nested-typed table would be refused as
         a 'type conflict' even though nullability is explicitly not
         part of the contract (r11 advisor)."""
@@ -2500,24 +2508,15 @@ class TxTable:
             # the fraction guard, AND the vector write; without it
             # each would re-scan every live file's predicate
             matched = (
-                self._read_files(live)
+                self._positioned(
+                    self._read_files(live), self._dv_rows(dv_map, live)
+                )
+                .filter(F.coalesce(condition, F.lit(False)))
                 .select(
-                    F.element_at(
-                        F.split(F.col("_metadata.file_path"), "/"), -1
-                    ).alias("file"),
-                    F.col("_metadata.row_index").alias("pos"),
-                    F.coalesce(condition, F.lit(False)).alias("__m"),
+                    F.col("__dv_file").alias("file"),
+                    F.col("__dv_pos").alias("pos"),
                 )
-                .filter("__m")
-                .select("file", "pos")
             )
-            dvd = [f for f in live if f in dv_map]
-            if dvd:
-                matched = matched.join(
-                    F.broadcast(self._dv_rows(dv_map, dvd)),
-                    ["file", "pos"],
-                    "left_anti",
-                )
             # ONE action (r14 optimization round): the vector write
             # itself materializes the matched set, and its parquet
             # footers carry the exact row count the no-op probe and
@@ -2878,27 +2877,9 @@ class TxTable:
                 f"schema {cur.columns}"
             )
         cols = cur.columns
-        scan = cur.select(
-            "*",
-            F.element_at(
-                F.split(F.col("_metadata.file_path"), "/"), -1
-            ).alias("__dv_file"),
-            F.col("_metadata.row_index").alias("__dv_pos"),
-        )
-        dvd = [f for f in live if f in dv_map]
-        if dvd:
-            # rows an earlier vector erased are logically gone —
-            # they must neither re-match nor resurrect transformed
-            scan = scan.join(
-                F.broadcast(
-                    self._dv_rows(dv_map, dvd).select(
-                        F.col("file").alias("__dv_file"),
-                        F.col("pos").alias("__dv_pos"),
-                    )
-                ),
-                ["__dv_file", "__dv_pos"],
-                "left_anti",
-            )
+        # rows an earlier vector erased are logically gone — they must
+        # neither re-match nor resurrect transformed
+        scan = self._positioned(cur, self._dv_rows(dv_map, live))
         # persist: the matched rows (O(matched) — the MoR-update
         # contract) feed both the vector write and the transformed-row
         # write; without it each re-scans every live file. The no-op
@@ -3000,73 +2981,97 @@ class TxTable:
         schema read from a footer on the driver, not by a Spark job."""
         return self.spark.read.schema(_parquet_read_schema(paths)).parquet(*paths)
 
-    def _dv_rows(self, dv_map: dict, files: list[str]) -> DataFrame:
+    def _dv_rows(self, dv_map: dict, files: list[str]) -> DataFrame | None:
         """The (file, pos) deletion rows covering ``files`` under
         ``dv_map`` (values: a per-file part STACK, or a bare str for
-        pre-r12 cumulative commit records): each distinct dv part is
-        read once and filtered to the files currently mapped to it
-        (a pre-r12 part may also hold stale rows for files whose
-        mapping a later delete replaced; r12+ parts are single-file
-        by construction and the filter is a no-op)."""
-        by_part: dict[str, list[str]] = {}
-        for f in files:
-            parts = dv_map[f]
-            for d in (parts,) if isinstance(parts, str) else parts:
-                by_part.setdefault(d, []).append(f)
-        out = None
-        for d, fs in sorted(by_part.items()):
-            rows = self._scan([self._local_path(d)]).filter(
-                F.col("file").isin(fs)
-            ).select("file", "pos")
-            out = rows if out is None else out.unionByName(rows)
-        return out
+        pre-r12 cumulative commit records), or None when no file in
+        ``files`` carries a vector. ONE scan reads every distinct dv
+        part, however many files and stacked parts there are, and
+        keeps a row only when its (dv part, file) pair is in the map:
+        a pre-r12 part may also hold stale rows for files whose
+        mapping a later delete replaced, and those must not apply.
+        r12+ parts are single-file by construction, so for them the
+        filter keeps every row. The pair test is one ``isin`` over
+        ``part/file`` strings (neither name holds a ``/``), which
+        Spark evaluates as a hash-set lookup past a few pairs."""
+        pairs = sorted({
+            (d, f)
+            for f in files
+            if f in dv_map
+            for d in (
+                (dv_map[f],) if isinstance(dv_map[f], str) else dv_map[f]
+            )
+        })
+        if not pairs:
+            return None
+        parts = sorted({d for d, _ in pairs})
+        return self._scan([self._local_path(d) for d in parts]).filter(
+            F.concat_ws(
+                "/", F.col("_metadata.file_name"), F.col("file")
+            ).isin([f"{d}/{f}" for d, f in pairs])
+        ).select("file", "pos")
+
+    @staticmethod
+    def _positioned(
+        data: DataFrame, rows: DataFrame | None = None,
+        how: str = "left_anti",
+    ) -> DataFrame:
+        """``data``, a scan of data parts, with each row's physical
+        position appended: ``__dv_file``, its part name
+        (``_metadata.file_name``), and ``__dv_pos``, its
+        ``_metadata.row_index`` — the key deletion vectors record.
+        Given ``rows``, a (file, pos) row set, the result is joined to
+        it on that key with ``rows`` broadcast: ``left_anti`` drops
+        those positions, ``left_semi`` keeps only them."""
+        out = data.select(
+            "*",
+            F.col("_metadata.file_name").alias("__dv_file"),
+            F.col("_metadata.row_index").alias("__dv_pos"),
+        )
+        if rows is None:
+            return out
+        return out.join(
+            F.broadcast(rows.toDF("__dv_file", "__dv_pos")),
+            ["__dv_file", "__dv_pos"],
+            how,
+        )
 
     def _scan_with_dv(
-        self, names: list[str], dv_map: dict[str, str],
-        merge_schema: bool = False,
+        self, names: list[str], dv_map: dict,
+        merge_schema: bool = False, with_file: bool = False,
     ) -> DataFrame:
-        """Scan ``names`` with DELETION VECTORS applied: files carrying
-        a DV read with their parquet ``_metadata.row_index`` and drop
-        logically-deleted positions via ONE broadcast positional
-        anti-join — the merge-on-read half of the public formats'
-        deletion-vector design. Scale shape: the broadcast side is the
-        DV row set (cardinality = deleted rows in the scanned files —
-        DVs are the SELECTIVE-delete path; a delete touching a large
-        fraction of the table belongs to mode='cow', and ``optimize``
-        folds accumulated vectors back into clean files), and clean
-        files take the plain multi-path scan with zero extra cost."""
-        dvd = [n for n in names if n in dv_map]
-        if not dvd:
-            return self._read_files(names, merge_schema)
-        clean = [n for n in names if n not in dv_map]
-        data = self._read_files(dvd, merge_schema)
-        cols = data.columns
-        kept = (
-            data.select(
-                "*",
-                F.element_at(
-                    F.split(F.col("_metadata.file_path"), "/"), -1
-                ).alias("__dv_file"),
-                F.col("_metadata.row_index").alias("__dv_pos"),
+        """Scan ``names`` with DELETION VECTORS applied, as at most
+        two parquet scans whatever the commit history: one of every
+        file carrying a DV, whose rows drop their logically-deleted
+        positions in ONE broadcast positional anti-join against
+        :meth:`_dv_rows` (one more scan, of every dv part), and one
+        plain multi-path scan of the clean files — the merge-on-read
+        half of the public formats' deletion-vector design. Scale
+        shape: the broadcast side is the DV row set (cardinality =
+        deleted rows in the scanned files — DVs are the
+        SELECTIVE-delete path; a delete touching a large fraction of
+        the table belongs to mode='cow', and ``optimize`` folds
+        accumulated vectors back into clean files). ``with_file``
+        keeps each row's part name as a ``__dv_file`` column; the
+        two scans union by name (missing columns null under
+        ``merge_schema``)."""
+        out = None
+        for group in (
+            [n for n in names if n in dv_map],
+            [n for n in names if n not in dv_map],
+        ):
+            if not group:
+                continue
+            data = self._read_files(group, merge_schema)
+            rows = self._dv_rows(dv_map, group)
+            if rows is not None or with_file:
+                data = self._positioned(data, rows).select(
+                    *data.columns, *(["__dv_file"] if with_file else [])
+                )
+            out = data if out is None else out.unionByName(
+                data, allowMissingColumns=merge_schema
             )
-            .join(
-                F.broadcast(
-                    self._dv_rows(dv_map, dvd).select(
-                        F.col("file").alias("__dv_file"),
-                        F.col("pos").alias("__dv_pos"),
-                    )
-                ),
-                ["__dv_file", "__dv_pos"],
-                "left_anti",
-            )
-            .select(*cols)
-        )
-        if not clean:
-            return kept
-        return kept.unionByName(
-            self._read_files(clean, merge_schema),
-            allowMissingColumns=merge_schema,
-        )
+        return self._read_files([], merge_schema) if out is None else out
 
     def _broadcast_bound(self) -> int:
         """Spark's ``spark.sql.autoBroadcastJoinThreshold`` in bytes
@@ -3166,18 +3171,23 @@ class TxTable:
         fixed — and conjoins the predicates as row filters so kept
         files stay exact (nulls never match, SQL semantics).
 
-        Merge-on-read resolution: if the snapshot carries live
-        equality-delete files, data files are read grouped by their
-        add version (one multi-path parquet scan per commit
-        generation, NOT per file) and anti-joined against the delete
-        keys with the scoping rule ``delete_version > added_at`` —
-        a delete never touches rows its own merge (or a later one)
-        added. Extra read cost: one key anti join — broadcast-hinted
-        only while the summed delete-file size fits Spark's broadcast
-        threshold (r14: a merge-heavy, never-optimized table's
-        accumulated key set degrades to a shuffled join instead of
-        dying on driver/broadcast limits); ``optimize()`` folds the
-        deletes away."""
+        The plan's shape does not grow with the commit history: live
+        files are read by at most two parquet scans (files carrying
+        deletion vectors, clean files; see :meth:`_scan_with_dv`)
+        plus one scan of every dv part. Merge-on-read resolution: if
+        the snapshot carries live equality-delete files, each row
+        keeps its part name and the rows are anti-joined against the
+        delete keys — one scan of every delete file per merge key —
+        with the scoping rule ``delete_version > added_at``: a delete
+        never touches rows its own merge (or a later one) added. The
+        rule is the join's residual condition, so it is evaluated
+        only for rows whose key matches. Extra read cost: one key
+        anti join — broadcast-hinted only while the summed
+        delete-file size fits Spark's broadcast threshold (r14: a
+        merge-heavy, never-optimized table's accumulated key set
+        degrades to a shuffled join instead of dying on
+        driver/broadcast limits); ``optimize()`` folds the deletes
+        away."""
 
         if range_filter is not None and not (
             isinstance(range_filter, dict)
@@ -3271,42 +3281,33 @@ class TxTable:
                     [f for f, _, _ in entries], dv_map, merge_schema
                 )
             )
-        by_version: dict[int, list[str]] = {}
-        for f, _, va in entries:
-            by_version.setdefault(va, []).append(f)
-        base = None
-        for va, names in sorted(by_version.items()):
-            part = self._scan_with_dv(names, dv_map, merge_schema).withColumn(
-                "__added_at", F.lit(va)
-            )
-            base = part if base is None else base.unionByName(
-                part, allowMissingColumns=merge_schema
-            )
-        if base is None:
+        if not entries:
             return self._read_files([], merge_schema)
+        added_at = {f: va for f, _, va in entries}
+        base = self._scan_with_dv(
+            list(added_at), dv_map, merge_schema, with_file=True
+        )
         # one anti join per distinct merge key (usually exactly one);
         # the broadcast hint is SIZE-GUARDED (r13 verdict ask #3) —
         # above Spark's broadcast threshold the accumulated live
         # delete-key set joins shuffled instead of being forced
-        # driver-side (run optimize() to fold the debt away)
+        # driver-side (run optimize() to fold the debt away). The
+        # version scope is the join's residual condition, so only
+        # key-matching pairs look up their file's add version: rows
+        # matching no delete key pay nothing per live file.
         for key in sorted({k for _, _, k in deletes}):
-            dk = None
-            dfiles = []
-            for f, dv, k in deletes:
-                if k != key:
-                    continue
-                dfiles.append(f)
-                d = self._scan([self._local_path(f)]).select(
-                    F.col(key).alias("__dk"), F.lit(dv).alias("__dv")
-                )
-                dk = d if dk is None else dk.unionByName(d)
+            dfiles = {f: dv for f, dv, k in deletes if k == key}
+            dk = self._scan([self._local_path(f) for f in dfiles]).select(
+                F.col(key).alias("__dk"),
+                _lookup(dfiles, F.col("_metadata.file_name")).alias("__dv"),
+            )
             base = base.join(
-                self._hint_broadcast_if_small(dk, dfiles),
+                self._hint_broadcast_if_small(dk, list(dfiles)),
                 (base[key] == F.col("__dk"))
-                & (F.col("__dv") > base["__added_at"]),
+                & (F.col("__dv") > _lookup(added_at, base["__dv_file"])),
                 "left_anti",
             )
-        return _row_filter(base.drop("__added_at"))
+        return _row_filter(base.drop("__dv_file"))
 
     def history(self) -> list[dict]:
         return [self._read_action(v) for v in self._versions()]
@@ -3556,26 +3557,9 @@ class TxTable:
                         "left_anti",
                     )
                 data = self._read_files(files)
-                cols = data.columns
                 changed = (
-                    data.select(
-                        "*",
-                        F.element_at(
-                            F.split(F.col("_metadata.file_path"), "/"), -1
-                        ).alias("__dv_file"),
-                        F.col("_metadata.row_index").alias("__dv_pos"),
-                    )
-                    .join(
-                        F.broadcast(
-                            new.select(
-                                F.col("file").alias("__dv_file"),
-                                F.col("pos").alias("__dv_pos"),
-                            )
-                        ),
-                        ["__dv_file", "__dv_pos"],
-                        "left_semi",
-                    )
-                    .select(*cols)
+                    self._positioned(data, new, "left_semi")
+                    .select(*data.columns)
                     .withColumn(
                         "_change_op",
                         F.lit("update_preimage" if is_update else "delete"),
@@ -5949,9 +5933,6 @@ class TxLogDataSource(DataSource):
         return T.StructType([have[c] for c in want])
 
     def schema(self):
-        import pyarrow.parquet as pq
-        from pyspark.sql.pandas.types import from_arrow_schema
-
         # Bind to the LATEST SNAPSHOT's newest file, not an arbitrary
         # *.parquet in the table root: the root also holds
         # logically-removed pre-merge/pre-optimize files, and a
@@ -5961,9 +5942,8 @@ class TxLogDataSource(DataSource):
         full = t.write_schema(_resolve_asof_version(t, self.options))
         if full is None:
             # zero-file snapshot (all rows deleted)
-            f = t._local_path(t._schema_file())
             return self._prune_schema(
-                from_arrow_schema(pq.ParquetFile(f).schema_arrow)
+                _parquet_read_schema([t._local_path(t._schema_file())])
             )
         # refuse float rangeFilter columns BEFORE the columns
         # projection drops them from the reader schema (r14)

@@ -24,6 +24,20 @@ def pytest_configure(config):
         "with --run-slow or SPARK_GRAFT_RUN_SLOW=1. Every slow test "
         "has a fast sibling keeping the code path covered by default.",
     )
+    # test_txlog.py triplicates EVERY test across the three injected
+    # store seams (posix / cas / memfs) via an autouse fixture — ~2/3
+    # of that file's runtime re-proves table logic that is
+    # byte-identical across stores. By default only the [posix]
+    # variant runs, except for tests marked store_seam.
+    config.addinivalue_line(
+        "markers",
+        "store_seam: txlog test whose subject IS a store primitive "
+        "(publish_exclusive atomicity, conditional put, racing commits, "
+        "FileStore put/mtime/listing/read_path semantics, vacuum's "
+        "store-side guards): its [cas] and [memfs] variants run by "
+        "default too. --run-slow / SPARK_GRAFT_RUN_SLOW=1 runs every "
+        "test's full store matrix.",
+    )
 
 
 def pytest_addoption(parser):
@@ -33,30 +47,6 @@ def pytest_addoption(parser):
         default=False,
         help="also run tests marked @pytest.mark.slow",
     )
-
-
-# test_txlog.py triplicates EVERY test across the three injected
-# store seams (posix / cas / memfs) via an autouse fixture — ~2/3 of
-# that file's 21-minute runtime re-proves table logic that is
-# byte-identical across stores. By default only the [posix] variant
-# runs, EXCEPT for the tests below, whose subject IS the store
-# primitive (publish_exclusive atomicity, conditional put, racing
-# commits, FileStore put/mtime/listing semantics, vacuum's store-side
-# guards): those keep all three variants fast. --run-slow /
-# SPARK_GRAFT_RUN_SLOW=1 restores the full matrix (CI's long lane).
-_STORE_SEAM_TESTS = {
-    "test_create_append_read",          # cross-store smoke
-    "test_filestore_put_consumes_source",
-    "test_cas_store_publish_is_conditional_put",
-    "test_concurrent_commit_collision_raises",
-    "test_commit_race_inside_publish_window",
-    "test_append_auto_rebases_on_lost_race",
-    "test_dv_ops_fail_loud_on_commit_race",
-    "test_vacuum_keeps_retained_versions_readable",
-    "test_vacuum_dry_run_deletes_nothing",
-    "test_vacuum_min_age_spares_inflight_writer_parts",
-    "test_vacuum_refuses_to_strand_registered_stream",
-}
 
 
 def pytest_collection_modifyitems(config, items):
@@ -78,8 +68,7 @@ def pytest_collection_modifyitems(config, items):
         if item.fspath.basename == "test_txlog.py" and item.name.endswith(
             ("[cas]", "[memfs]")
         ):
-            base = item.name.split("[", 1)[0]
-            if base not in _STORE_SEAM_TESTS:
+            if item.get_closest_marker("store_seam") is None:
                 item.add_marker(skip_variant)
 
 SF_SMOKE = "/root/testdata/sf0.001"

@@ -18,6 +18,7 @@ from data_analyse_marche_emploi_spark.sources.txlog import (
 )
 
 posix_only = pytest.mark.posix_only
+store_seam = pytest.mark.store_seam
 
 
 @pytest.fixture(params=["posix", "cas", "memfs"], autouse=True)
@@ -89,6 +90,7 @@ def _df(spark, rows):
     return spark.createDataFrame(rows, "k long, v string")
 
 
+@store_seam
 def test_create_append_read(spark, tmp_path):
     p = str(tmp_path / "t")
     t = TxTable.create(spark, p, _df(spark, [(1, "a"), (2, "b")]))
@@ -258,6 +260,7 @@ def test_bloom_probe_bridges_numeric_types(spark, tmp_path):
     ]
 
 
+@store_seam
 def test_filestore_put_consumes_source(tmp_path):
     """FileStore contract (r10 verdict ask #5): ``put`` CONSUMES the
     staged scratch file — rename or upload-then-delete, the source
@@ -952,6 +955,7 @@ def test_update_where_feeds_change_feed_as_update_pairs(spark, tmp_path):
     assert chg == [(2, "B", "update_postimage"), (2, "b", "update_preimage")]
 
 
+@store_seam
 def test_concurrent_commit_collision_raises(spark, tmp_path):
     """Optimistic concurrency: two writers racing to the same version
     leave exactly one winner; the loser gets a loud error, never a
@@ -968,6 +972,7 @@ def test_concurrent_commit_collision_raises(spark, tmp_path):
 
 
 @posix_only
+@store_seam
 def test_commit_race_inside_publish_window(spark, tmp_path):
     """The atomicity guarantee must come from the LogStore publish
     primitive itself, NOT from a pre-publish exists() check (which
@@ -999,6 +1004,7 @@ def test_commit_race_inside_publish_window(spark, tmp_path):
 
 
 @posix_only
+@store_seam
 def test_append_auto_rebases_on_lost_race(spark, tmp_path):
     """Blind appends commute: an appender that loses the version race
     must transparently re-commit at the next free version (data files
@@ -1071,6 +1077,7 @@ def test_stream_schema_binds_latest_generation(spark, tmp_path):
     assert names == ["k", "v", "w"], names
 
 
+@store_seam
 def test_vacuum_keeps_retained_versions_readable(spark, tmp_path):
     p = str(tmp_path / "t")
     t = TxTable.create(spark, p, _df(spark, [(1, "a"), (2, "b")]))
@@ -1217,6 +1224,7 @@ def test_read_merge_schema_across_generations(spark, tmp_path):
     assert got == {1: None, 2: 7.5}
 
 
+@store_seam
 def test_dv_ops_fail_loud_on_commit_race(spark, tmp_path):
     """Deletion-vector commits do NOT rebase (positions are only
     valid against the exact file set the scan saw): a competing
@@ -1251,6 +1259,7 @@ def test_dv_ops_fail_loud_on_commit_race(spark, tmp_path):
     }
 
 
+@store_seam
 def test_vacuum_dry_run_deletes_nothing(spark, tmp_path):
     """vacuum(dry_run=True) reports the would-be victims WITHOUT
     deleting anything; the real run then removes exactly that set."""
@@ -2908,6 +2917,7 @@ def test_add_constraint_rejects_spark_only_syntax(spark, tmp_path):
     assert sorted(r.k for r in t.read().collect()) == [1, 2]
 
 
+@store_seam
 def test_cas_store_publish_is_conditional_put(tmp_path):
     """The dict-backed store's publish primitive itself: exactly one
     of two racing publishes of the same key wins, the loser raises,
@@ -3023,6 +3033,7 @@ def test_optimize_rebases_past_concurrent_append(spark, tmp_path):
 
 
 @posix_only
+@store_seam
 def test_vacuum_min_age_spares_inflight_writer_parts(spark, tmp_path):
     """The retention-window guard: an unreferenced part YOUNGER than
     min_age_seconds survives vacuum (it may belong to an in-flight
@@ -3699,6 +3710,86 @@ def test_dv_parts_per_file_and_incremental_stacking(spark, tmp_path):
         ).to_pydict()
         assert set(rows["file"]) == {f}
         assert len(rows["pos"]) == 2  # k%5==1 hits 2 of 10 per file
+
+
+@store_seam
+def test_legacy_cumulative_dv_part_applies_only_its_mapped_rows(
+    spark, tmp_path, log_store_mode
+):
+    """Pre-r12 delete-dv commits map each touched file to one shared
+    part (a bare string) and carry ``dv_prev``; a later commit that
+    remaps a file leaves that file's stale rows in the old part. Every
+    read path drops exactly the positions the map assigns. Positions
+    are keyed by the ``_metadata.file_name`` a scan reports, which on
+    the memfs store is the file name of a cache copy."""
+    import uuid
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from data_analyse_marche_emploi_spark.sources.txlog import (
+        register_txlog_source,
+    )
+
+    p = str(tmp_path / "t")
+    t = TxTable.create(
+        spark, p, _df(spark, [(i, f"a{i}") for i in range(6)]).coalesce(1)
+    )
+    t.append(_df(spark, [(i, f"b{i}") for i in range(10, 16)]).coalesce(1))
+    a, b = (t._read_action(v)["adds"][0] for v in (0, 1))
+    keys = {
+        f: pq.read_table(t._local_path(f)).column("k").to_pylist()
+        for f in (a, b)
+    }
+
+    def publish(rows):
+        name = f"dv-{uuid.uuid4().hex}.parquet"
+        local = str(tmp_path / name)
+        pq.write_table(
+            pa.table({
+                "file": [f for f, _ in rows],
+                "pos": pa.array([q for _, q in rows], pa.int64()),
+            }),
+            local,
+        )
+        t.file_store.put(p, name, local)
+        return name
+
+    p1 = publish([(a, 0), (a, 1), (b, 0)])
+    t._commit(2, [], [], "delete-dv", min_protocol=2,
+              extra={"dv": {a: p1, b: p1}, "dv_prev": {}})
+    # a's new part leaves out (a, 1), so applying p1's stale row for a
+    # would show
+    p2 = publish([(a, 0), (a, 2)])
+    t._commit(3, [], [], "delete-dv", min_protocol=2,
+              extra={"dv": {a: p2}, "dv_prev": {a: p1, b: p1}})
+    assert t._snapshot_dv() == {a: (p2,), b: (p1,)}
+    assert t._scan([t._local_path(p1)]).select(
+        "_metadata.file_name"
+    ).first()[0] == p1
+
+    def kept(deleted):
+        return sorted(
+            k for f in (a, b) for q, k in enumerate(keys[f])
+            if (f, q) not in deleted
+        )
+
+    at_2 = kept({(a, 0), (a, 1), (b, 0)})
+    at_3 = kept({(a, 0), (a, 2), (b, 0)})
+    assert sorted(r.k for r in t.read().collect()) == at_3
+    assert sorted(r.k for r in t.read(version=2).collect()) == at_2
+    assert sorted(
+        (r.k, r._change_version) for r in t.read_changes("k", 1).collect()
+    ) == sorted(
+        [(keys[f][q], 2) for f, q in ((a, 0), (a, 1), (b, 0))]
+        + [(keys[a][2], 3)]
+    )
+    if log_store_mode == "posix":
+        # the format reader plans in a Python worker, which sees the
+        # on-disk stores only
+        register_txlog_source(spark)
+        fmt = spark.read.format("txlog").option("path", p).load()
+        assert sorted(r.k for r in fmt.collect()) == at_3
 
 
 def test_dv_write_coalesces_maxRecordsPerFile_splits(spark, tmp_path):
@@ -4962,6 +5053,7 @@ def test_cdf_key_validates_at_plan_time(spark, tmp_path):
 
 
 @posix_only
+@store_seam
 def test_vacuum_refuses_to_strand_registered_stream(spark, tmp_path):
     """r12 verdict ask #5: a stream registered via the streamId option
     records its committed low-water mark, and vacuum REFUSES (dry run

@@ -3,12 +3,14 @@ infer (``txlog._parquet_read_schema``: one footer read on the driver),
 so table reads and DML build their DataFrames without a
 schema-inference job. The declaration is pinned here against Spark's
 own inference for every kind of part the engine scans, and each DML
-op's job count is pinned so an inference job cannot creep back."""
+op's job count is pinned so an inference job cannot creep back, as is
+the number of scans a snapshot read plans."""
 
 from __future__ import annotations
 
 import os
 import random
+import re
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -68,13 +70,11 @@ def parts(spark, tmp_path_factory):
     finally:
         spark.conf.unset("spark.sql.files.maxRecordsPerFile")
     coalesced = _dv_parts(t)
-    # the DSv2 writer's parts: a table it creates (its append check
-    # reads a timestamp_ntz column back as timestamp and refuses)
-    p2 = p + "_dsv2"
+    # the DSv2 writer's parts
     _rows(spark, range(100, 110)).write.format("txlog").option(
-        "path", p2
+        "path", p
     ).mode("append").save()
-    t2 = TxTable(spark, p2)
+    dsv2 = t._read_action(t.latest_version())["adds"]
     t.merge_upsert(_rows(spark, range(30, 50)), key="k", mode="mor")
     merge = t._read_action(t.latest_version())
     kinds = {
@@ -82,9 +82,9 @@ def parts(spark, tmp_path_factory):
         "delete": merge["delete_adds"],
         "dv": spark_dv,
         "dv_coalesced": coalesced,
+        "dsv2": dsv2,
     }
     out = {k: [t._local_path(n) for n in names] for k, names in kinds.items()}
-    out["dsv2"] = [t2._local_path(n) for n in t2.snapshot_files()]
     writers = {
         k: {pq.ParquetFile(f).metadata.created_by.split()[0] for f in fs}
         for k, fs in out.items()
@@ -152,6 +152,35 @@ def test_declared_schema_keeps_field_metadata(spark, tmp_path):
     assert declared["k"].metadata == {"comment": "key"}
 
 
+def test_dsv2_append_to_a_timestamp_ntz_table(spark, tmp_path):
+    """The format writer's schema check reads the table's
+    ``timestamp_ntz`` column as ``timestamp_ntz``, so the append lands,
+    and the format read equals ``TxTable.read()``. (No ``timestamp``
+    column: Spark writes it as INT96, which the format reader cannot
+    yet read back.)"""
+
+    def rows(lo, hi):
+        return spark.sql(
+            "SELECT id AS k, timestamp_ntz'2024-01-01 00:00:00' "
+            f"+ make_interval(0, 0, 0, 0, id) AS ntz FROM range({lo}, {hi})"
+        )
+
+    register_txlog_source(spark)
+    p = str(tmp_path / "t")
+    t = TxTable.create(spark, p, rows(0, 10).coalesce(1))
+    rows(10, 20).write.format("txlog").option("path", p).mode(
+        "append"
+    ).save()
+    assert t.latest_version() == 1
+    fmt = spark.read.format("txlog").option("path", p).load()
+    want = t.read()
+    assert fmt.schema == want.schema
+    got = sorted(fmt.collect(), key=lambda r: r.k)
+    exp = sorted(want.collect(), key=lambda r: r.k)
+    assert got == exp
+    assert [r.k for r in exp] == list(range(20))
+
+
 def test_table_read_uses_the_declared_schema(spark, parts):
     """What TxTable scans equals Spark's inference over the same parts,
     merge_schema off and on."""
@@ -175,7 +204,7 @@ JOB_BUDGET = {
     "update_dv": 5,
     "merge_mor": 7,
     "read": 0,
-    "optimize": 5,
+    "optimize": 4,
 }
 
 
@@ -210,6 +239,51 @@ def test_txlog_op_job_budget(spark, tmp_path):
     }
     jobs = {name: jobs_in_group(spark, op) for name, op in ops.items()}
     assert jobs == JOB_BUDGET
+
+
+def _parquet_relations(df) -> int:
+    analyzed = df._jdf.queryExecution().analyzed().toString()
+    return len(re.findall(r"Relation \[[^\]]*\] parquet", analyzed))
+
+
+def test_read_plan_scans_each_file_class_once(spark, tmp_path):
+    """``read()`` of a snapshot with pending deletion vectors and
+    equality deletes plans at most four parquet scans — data files
+    carrying vectors, clean data files, dv parts, delete keys —
+    however many commit generations, stacked vectors or delete files
+    it holds."""
+
+    def rows(lo, hi, bump=0):
+        return spark.range(lo, hi).select(
+            F.col("id").alias("k"), (F.col("id") * 10 + bump).alias("v")
+        ).coalesce(1)
+
+    t = TxTable.create(spark, str(tmp_path / "t"), rows(0, 12))
+    for g in range(1, 4):
+        t.append(rows(12 * g, 12 * g + 12))
+    want = {k: k * 10 for k in range(48)}
+    for m, r in ((7, 0), (5, 1)):
+        t.delete_where(f"k % {m} = {r}", mode="dv")
+        want = {k: v for k, v in want.items() if k % m != r}
+    stacks = t._snapshot_dv()
+    assert sum(len(ps) == 2 for ps in stacks.values()) >= 2, stacks
+    t.merge_upsert(rows(40, 52, bump=1), key="k", mode="mor")
+    want.update({k: k * 10 + 1 for k in range(40, 52)})
+
+    def check() -> int:
+        df = t.read()
+        assert {r.k: r.v for r in df.collect()} == want
+        return _parquet_relations(df)
+
+    first = check()
+    assert first <= 4
+    # two more generations and a second delete file
+    t.append(rows(60, 70))
+    t.merge_upsert(rows(45, 65, bump=2), key="k", mode="mor")
+    want.update({k: k * 10 for k in range(60, 70)})
+    want.update({k: k * 10 + 2 for k in range(45, 65)})
+    assert len(t._snapshot_mor()[1]) == 2
+    assert check() == first
 
 
 # -- FileStore capability flag -------------------------------------------------
