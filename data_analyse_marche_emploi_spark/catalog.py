@@ -8640,7 +8640,7 @@ def tablelog_partitioned(spark, sf_dir):
 
     fr_files = {
         _os.path.realpath(t.file_store.read_path(t.path, f))
-        for f, s in t._snapshot_entries()
+        for f, s, _ in t._snapshot().entries
         if s.get("__partition__", {}).get("lang") == "fr"
     }
     opened = {
@@ -8969,7 +8969,7 @@ def tablelog_dv_delete(spark, sf_dir):
     assert sorted(t.snapshot_files()) == before, (
         "deletion vectors rewrote data files"
     )
-    assert t._snapshot_dv(), "no deletion vectors recorded"
+    assert t._snapshot().dv, "no deletion vectors recorded"
     return t.read()
 
 
@@ -9011,7 +9011,7 @@ def tablelog_dv_update(spark, sf_dir):
     assert before <= set(t.snapshot_files()), (
         "DV update rewrote an original file"
     )
-    assert t._snapshot_dv(), "no deletion vectors recorded"
+    assert t._snapshot().dv, "no deletion vectors recorded"
     return t.read()
 
 
@@ -10177,9 +10177,9 @@ def tablelog_eq_checkpoint(spark, sf_dir):
     optimize happened to fold them. The checkpoint record now carries
     each live file's TRUE add version plus the live delete files with
     their versions and keys (sources/txlog.py checkpoint() /
-    _snapshot_mor), so the version-scoped anti-join — a delete at
-    version d erases keys only from files added BEFORE d — replays
-    exactly from the consolidated seed; the record publishes under
+    _TableState.from_checkpoint), so the version-scoped anti-join — a
+    delete at version d erases keys only from files added BEFORE d —
+    replays exactly from the consolidated seed; the record publishes under
     the pre-r13-invisible ``.checkpoint.v3`` name with the eq
     protocol revision. The entry lands a MoR upsert and a keyed MoR
     delete, checkpoints WITHOUT optimizing, asserts the record
@@ -10267,8 +10267,9 @@ def txlog_mor_change_feed(spark, sf_dir):
         mode="mor",
     )                                               # v1: upsert + inserts
     t.delete_where("k % 32 = 0", mode="mor", key="k")  # v2: keyed delete
-    _, dels = t._snapshot_mor()
-    assert dels, "the feed must run over the DIRTY table (no fold)"
+    assert t._snapshot().deletes, (
+        "the feed must run over the DIRTY table (no fold)"
+    )
     return t.read_changes("k", 0)
 
 
@@ -10398,9 +10399,10 @@ def stream_txlog_mor_cdf(spark, sf_dir):
         mode="mor",
     )                                               # v1: upsert + inserts
     t.delete_where("k % 24 = 0", mode="mor", key="k")  # v2: keyed delete
-    _, dels = t._snapshot_mor()
-    assert dels, "the feed must run over the DIRTY table (no fold)"
-    planned = TX._plan_cdf_partitions(t, path, 0, 2, "k")
+    assert t._snapshot().deletes, (
+        "the feed must run over the DIRTY table (no fold)"
+    )
+    planned, _ = TX._plan_cdf_partitions(t, path, t._snapshot(0), 2, "k")
     assert sum(
         1 for q in planned if q.kind == "mor" and q.version == 1
     ) > 1, "the wide MoR merge must distribute across key slices"

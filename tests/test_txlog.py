@@ -495,14 +495,14 @@ def test_dv_optimize_vacuum_interplay(spark, tmp_path):
     )
     t = TxTable.create(spark, p, df.coalesce(2))
     t.delete_where("k % 4 = 0", mode="dv")
-    dv_parts = {d for ps in t._snapshot_dv().values() for d in ps}
+    dv_parts = {d for ps in t._snapshot().dv.values() for d in ps}
     assert dv_parts
     # keep_versions=1 keeps the dv-carrying head: parts must survive
     t.vacuum()
     assert all(t.file_store.exists(p, d) for d in dv_parts)
     expect = sorted(r.k for r in t.read().collect())
     t.optimize()
-    assert t._snapshot_dv() == {}
+    assert t._snapshot().dv == {}
     assert sorted(r.k for r in t.read().collect()) == expect
     assert t.count() == 15  # metadata-only again (no guard needed)
     removed = t.vacuum()
@@ -626,7 +626,7 @@ def test_dv_update_merge_on_read(spark, tmp_path):
     # protocol 2 rides the update commit too
     assert t._read_action(1)["protocol"] == 2
     t.optimize()
-    assert t._snapshot_dv() == {}
+    assert t._snapshot().dv == {}
     assert dict((r.k, r.x) for r in t.read().collect())[9] == 0.5
     # no-op burns no version; bad mode fails loudly
     head = t.latest_version()
@@ -920,7 +920,7 @@ def test_update_where_moves_rows_across_partitions(spark, tmp_path):
 
     fr_files = {
         _os.path.realpath(t.file_store.read_path(t.path, f))
-        for f, s in t._snapshot_entries()
+        for f, s, _ in t._snapshot().entries
         if s.get("__partition__", {}).get("lang") == "fr"
     }
     opened = {
@@ -935,8 +935,10 @@ def test_bloom_survives_optimize(spark, tmp_path):
     compacted table."""
     t = _bloom_tbl(spark, tmp_path)
     t.optimize()
-    entries = t._snapshot_entries()
-    assert all("__bloom__" in s and "v" in s["__bloom__"] for _, s in entries)
+    entries = t._snapshot().entries
+    assert all(
+        "__bloom__" in s and "v" in s["__bloom__"] for _, s, _ in entries
+    )
     r = t.read(eq_filter={"v": "row250"})
     assert [(x.k, x.v) for x in r.collect()] == [(250, "row250")]
     assert t.read(eq_filter={"v": "nowhere"}).count() == 0
@@ -1157,7 +1159,7 @@ def test_merge_data_skipping_prunes_by_log_stats(spark, tmp_path):
     t = TxTable.create(spark, p, _df(spark, [(1, "a"), (2, "b")]).coalesce(1))
     t.append(_df(spark, [(100, "x"), (101, "y")]).coalesce(1))
     v = t.latest_version()
-    cands = t._candidate_files(v, "k", 100, 100)
+    cands = t._candidate_files(t._snapshot(v), "k", 100, 100)
     all_files = t.snapshot_files(v)
     assert len(all_files) == 2
     assert len(cands) == 1, (cands, all_files)
@@ -1183,7 +1185,7 @@ def test_stats_survive_for_string_keys(spark, tmp_path):
     t.append(
         spark.createDataFrame([("zz", 3)], "k string, n long").coalesce(1)
     )
-    cands = t._candidate_files(t.latest_version(), "k", "zz", "zz")
+    cands = t._candidate_files(t._snapshot(), "k", "zz", "zz")
     assert len(cands) == 1
 
 
@@ -1206,7 +1208,7 @@ def test_checkpoint_bounds_replay_and_preserves_snapshots(spark, tmp_path):
     got = sorted((r["k"], r["v"]) for r in t.read().collect())
     assert got == [(1, "A"), (2, "b"), (3, "c")]
     # stats survived consolidation (skipping still prunes)
-    cands = t._candidate_files(t.latest_version(), "k", 3, 3)
+    cands = t._candidate_files(t._snapshot(), "k", 3, 3)
     assert len(cands) < len(t.snapshot_files())
 
 
@@ -1897,7 +1899,7 @@ def test_spark_writer_partition_by(spark, tmp_path):
     ).mode("append").save()
     t = TxTable(spark, p)
     assert t.partition_by() == ["lang"]
-    vals = [s.get("__partition__") for _, s in t._snapshot_entries()]
+    vals = [s.get("__partition__") for _, s, _ in t._snapshot().entries]
     assert all(v is not None and "lang" in v for v in vals)
     fr = t.read(partition_filter={"lang": "fr"})
     assert [r.k for r in fr.collect()] == [2]
@@ -1929,17 +1931,42 @@ def test_spark_writer_partition_by(spark, tmp_path):
     assert not TxTable(spark, str(tmp_path / "t3"))._versions()
 
 
-def test_txlog_random_ops_match_model(spark, tmp_path):
+def _scoped(state):
+    """A log state as reads see it: per live file its stats and the
+    delete files that reach it (``added_at`` matters only through
+    that scoping), plus the live deletes and vector stacks."""
+    return (
+        state.version,
+        [
+            (f, s, {d for d, dv, _ in state.deletes if dv > a})
+            for f, s, a in state.entries
+        ],
+        state.deletes,
+        state.dv,
+    )
+
+
+def test_txlog_random_ops_match_model(spark, tmp_path, log_store_mode):
     """Model-based check: random create/append/merge/delete/
     DV-delete/DV-update/optimize/checkpoint/restore sequences against
-    a driver-side dict model — read() must equal the model at EVERY
-    version (time travel over the whole history), after every
-    sequence. The strongest correctness harness for the log-replay +
-    CoW/MoR/deletion-vector machinery; the dirty-table guard matrix
-    (equality deletes AND vectors) is asserted in-sequence."""
+    a driver-side dict model — read(), count() and (posix) the format
+    reader must equal the model at EVERY version (time travel over
+    the whole history), after every sequence, and the log state
+    replayed from the newest checkpoint must equal the genesis fold
+    with checkpoints ignored. The strongest correctness harness for
+    the log-replay + CoW/MoR/deletion-vector machinery; the
+    dirty-table guard matrix (equality deletes AND vectors) is
+    asserted in-sequence."""
     import random
 
     import pytest as _pytest
+
+    from data_analyse_marche_emploi_spark.sources.txlog import (
+        _TableState,
+        register_txlog_source,
+    )
+
+    register_txlog_source(spark)
 
     rng = random.Random(9_2026)
     for seq in range(3):
@@ -2064,9 +2091,23 @@ def test_txlog_random_ops_match_model(spark, tmp_path):
             model_hist.append(dict(model))
             dirty_hist.append(dirty)
             dv_hist.append(dv_dirty)
+        genesis = _TableState()
         for v, want in enumerate(model_hist):
             got = {r["k"]: r["v"] for r in t.read(v).collect()}
             assert got == want, f"seq {seq} version {v}"
+            assert t.count(v) == len(want), f"seq {seq} count at v{v}"
+            if log_store_mode == "posix":
+                # the format reader plans in a Python worker, which
+                # sees only the on-disk POSIX stores
+                fmt = spark.read.format("txlog").option("path", p).option(
+                    "versionAsOf", v
+                ).load()
+                got = {r["k"]: r["v"] for r in fmt.collect()}
+                assert got == want, f"seq {seq} format read at v{v}"
+            genesis = genesis.apply(v, t._read_action(v))
+            assert _scoped(t._snapshot(v)) == _scoped(genesis), (
+                f"seq {seq} checkpointed state at v{v}"
+            )
         # r13: PER-COMMIT batch feed == the model's own state diff for
         # every commit the feed accepts (fold commits refuse; appends,
         # CoW merges/deletes/restores, DV ops, and now MERGE-ON-READ
@@ -2151,7 +2192,7 @@ def test_optimize_bin_packs_incrementally(spark, tmp_path):
     t.delete_where(F.col("k") == 0, mode="dv")
     v2 = t.optimize(target_file_bytes=target)
     assert big_file not in t.snapshot_files()
-    assert t._snapshot_dv() == {}
+    assert t._snapshot().dv == {}
     assert sorted(r.k for r in t.read().collect()) == expect[1:]
     # full=True rewrites everything
     v3 = t.optimize(target_file_bytes=target, full=True)
@@ -2171,10 +2212,10 @@ def test_optimize_zorder_tightens_both_columns(spark, tmp_path):
     df = spark.createDataFrame(rows, "a long, b long, payload long")
     t = TxTable.create(spark, p, df.repartition(8))
     t.optimize(zorder=("a", "b"), target_file_bytes=2 * 1024)
-    entries = t._snapshot_entries()
+    entries = t._snapshot().entries
     assert len(entries) >= 4
     spans_a, spans_b = [], []
-    for _, stats in entries:
+    for _, stats, _ in entries:
         assert "a" in stats and "b" in stats
         spans_a.append(stats["a"][1] - stats["a"][0])
         spans_b.append(stats["b"][1] - stats["b"][0])
@@ -2301,8 +2342,7 @@ def test_mor_optimize_folds_deletes(spark, tmp_path):
         (2, "B", "update_postimage"), (2, "b", "update_preimage")
     ]
     v = t.optimize()
-    _, dels = t._snapshot_mor(v)
-    assert dels == []
+    assert t._snapshot(v).deletes == ()
     assert sorted((r.k, r.v) for r in t.read().collect()) == [
         (1, "a"), (2, "B")]
     # clean again: CoW merge and checkpoint both work
@@ -2378,8 +2418,7 @@ def test_spark_writer_overwrite_resolves_mor_deletes(spark, tmp_path):
     _df(spark, [(5, "e")]).write.format("txlog").option("path", p).mode(
         "overwrite"
     ).save()
-    entries, dels = t._snapshot_mor()
-    assert dels == []
+    assert t._snapshot().deletes == ()
     assert sorted((r.k, r.v) for r in t.read().collect()) == [(5, "e")]
     # the pre-overwrite dirty state still time-travels correctly
     assert sorted((r.k, r.v) for r in t.read(1).collect()) == [
@@ -3218,7 +3257,7 @@ def test_partitioned_read_prunes_files_without_opening_them(spark, tmp_path):
     # the IO assertion: every planned input file is a recorded-fr part
     fr_files = {
         os.path.realpath(t.file_store.read_path(p, f))
-        for f, s in t._snapshot_entries()
+        for f, s, _ in t._snapshot().entries
         if s.get("__partition__", {}).get("lang") == "fr"
     }
     opened = {
@@ -3229,7 +3268,7 @@ def test_partitioned_read_prunes_files_without_opening_them(spark, tmp_path):
     # and pruning actually pruned: non-fr partitions exist and are absent
     all_files = {
         os.path.realpath(t.file_store.read_path(p, f))
-        for f, _ in t._snapshot_entries()
+        for f in t._snapshot().files
     }
     assert len(all_files) > len(fr_files)
 
@@ -3248,7 +3287,7 @@ def test_partitioned_null_partition_roundtrip(spark, tmp_path):
     got = t.read(partition_filter={"lang": None})
     assert {(r.k, r.v) for r in got.collect()} == {(2, "b"), (3, "c")}
     nul_files = [
-        f for f, s in t._snapshot_entries()
+        f for f, s, _ in t._snapshot().entries
         if "__partition__" in s and s["__partition__"].get("lang") is None
     ]
     assert nul_files
@@ -3271,7 +3310,7 @@ def test_partitioned_merge_rewrites_only_touched_partition(spark, tmp_path):
     )
     before = {
         f: s.get("__partition__", {}).get("lang")
-        for f, s in t._snapshot_entries()
+        for f, s, _ in t._snapshot().entries
     }
     v = t.merge_upsert(
         _pdf(spark, [(1, "fr", "A"), (9, "fr", "z")]), "lang"
@@ -3300,7 +3339,7 @@ def test_partitioned_delete_where_scoped_and_pruned(spark, tmp_path):
     )
     before = {
         f: s.get("__partition__", {}).get("lang")
-        for f, s in t._snapshot_entries()
+        for f, s, _ in t._snapshot().entries
     }
     v = t.delete_where(
         F.col("v") == "x", partition_filter={"lang": "fr"}
@@ -3340,7 +3379,7 @@ def test_partition_metadata_survives_checkpoint_and_restore(spark, tmp_path):
     assert {r.k for r in got.collect()} == {1, 3}
     fr_files = {
         os.path.realpath(t.file_store.read_path(p, f))
-        for f, s in t._snapshot_entries()
+        for f, s, _ in t._snapshot().entries
         if s.get("__partition__", {}).get("lang") == "fr"
     }
     assert {
@@ -3696,7 +3735,7 @@ def test_dv_parts_per_file_and_incremental_stacking(spark, tmp_path):
     for d, sz in sizes1.items():
         assert t.file_store.exists(p, d)
         assert t.file_store.size(p, d) == sz
-    stacks = t._snapshot_dv()
+    stacks = t._snapshot().dv
     assert all(len(ps) == 2 for ps in stacks.values()), stacks
     assert sorted(r.k for r in t.read().collect()) == [
         k for k in range(20) if k % 5 not in (0, 1)
@@ -3763,7 +3802,7 @@ def test_legacy_cumulative_dv_part_applies_only_its_mapped_rows(
     p2 = publish([(a, 0), (a, 2)])
     t._commit(3, [], [], "delete-dv", min_protocol=2,
               extra={"dv": {a: p2}, "dv_prev": {a: p1, b: p1}})
-    assert t._snapshot_dv() == {a: (p2,), b: (p1,)}
+    assert t._snapshot().dv == {a: (p2,), b: (p1,)}
     assert t._scan([t._local_path(p1)]).select(
         "_metadata.file_name"
     ).first()[0] == p1
@@ -4926,9 +4965,9 @@ def test_stream_cdf_planning_caches_state_across_batches(
     """r14: steady-state micro-batch CDF planning is O(new commits)
     per trigger — each batch's folded end state (live stats, pending
     eq-deletes, DV stacks) seeds the next CONTIGUOUS batch, so the
-    checkpointed-snapshot replay (_snapshot_mor/_snapshot_dv) runs
-    only on the first or a non-contiguous range; cached plans equal
-    fresh plans partition-for-partition."""
+    checkpointed-snapshot replay (TxTable._snapshot) runs only on a
+    non-contiguous range (the genesis state needs none); cached plans
+    equal fresh plans partition-for-partition."""
     import data_analyse_marche_emploi_spark.sources.txlog as TX
 
     p = str(tmp_path / "t")
@@ -4945,11 +4984,16 @@ def test_stream_cdf_planning_caches_state_across_batches(
     rdr = TX.TxLogStreamReader(schema, opts)
     th = TxTable(None, p)
     replays: list = []
-    orig = TxTable._snapshot_mor
+    orig = TxTable._snapshot
     monkeypatch.setattr(
-        TxTable, "_snapshot_mor",
+        TxTable, "_snapshot",
         lambda self, v=None: (replays.append(v), orig(self, v))[1],
     )
+
+    def fresh(start_v, end_v):
+        # the planner from a replayed start state (genesis needs none)
+        state = TX._TableState() if start_v < 0 else th._snapshot(start_v)
+        return TX._plan_cdf_partitions(th, p, state, end_v, "k")[0]
 
     def flat(parts):
         return [
@@ -4964,9 +5008,9 @@ def test_stream_cdf_planning_caches_state_across_batches(
     p3 = rdr._cdf_partitions(th, 2, 3)   # contiguous: cache hit
     assert replays == [], "contiguous batches must not replay the log"
     # cached plans == fresh plans (fresh planner replays once per call)
-    assert flat(p2) == flat(TX._plan_cdf_partitions(th, p, 1, 2, "k"))
-    assert flat(p3) == flat(TX._plan_cdf_partitions(th, p, 2, 3, "k"))
-    assert flat(p1) == flat(TX._plan_cdf_partitions(th, p, -1, 1, "k"))
+    assert flat(p2) == flat(fresh(1, 2))
+    assert flat(p3) == flat(fresh(2, 3))
+    assert flat(p1) == flat(fresh(-1, 1))
     assert replays == [1, 2], "fresh planning replays once per call"
     # a non-contiguous range (engine restart / retry of an older
     # batch) misses the cache and replays from the snapshot
@@ -4974,7 +5018,7 @@ def test_stream_cdf_planning_caches_state_across_batches(
     pr = rdr._cdf_partitions(th, 0, 3)
     assert replays == [0]
     replays.clear()
-    assert flat(pr) == flat(TX._plan_cdf_partitions(th, p, 0, 3, "k"))
+    assert flat(pr) == flat(fresh(0, 3))
 
 
 def test_cdf_probe_bounded_by_bytes_when_counts_unlogged(
@@ -5016,12 +5060,13 @@ def test_cdf_probe_bounded_by_bytes_when_counts_unlogged(
         # over the byte bound: no probe, planning stays metadata-only
         mp.setattr(TX, "_CDF_PROBE_MAX_BYTES", 1)
         t2 = TxTable(None, p)
-        parts = TX._plan_cdf_partitions(t2, p, 0, 1, "k")
+        parts, _ = TX._plan_cdf_partitions(t2, p, t2._snapshot(0), 1, "k")
         assert not probes, "stats-less wide commit still probed"
         assert [q.kind for q in parts if q.kind == "cow"] == ["cow"]
         # under the bound: the fail-fast probe runs
         mp.setattr(TX, "_CDF_PROBE_MAX_BYTES", 10**12)
-        TX._plan_cdf_partitions(TxTable(None, p), p, 0, 1, "k")
+        t3 = TxTable(None, p)
+        TX._plan_cdf_partitions(t3, p, t3._snapshot(0), 1, "k")
         assert probes, "small stats-less commit must still fail fast"
 
 
@@ -5323,7 +5368,7 @@ def test_checkpoint_consolidates_dv_state(spark, tmp_path):
     )
     # a FRESH handle replays from the checkpoint seed only
     t2 = TxTable(spark, p)
-    stacks = t2._snapshot_dv()
+    stacks = t2._snapshot().dv
     assert stacks and all(len(ps) == 2 for ps in stacks.values())
     assert sorted(r.k for r in t2.read().collect()) == expect
     # vacuum keeps the consolidated parts referenced

@@ -155,9 +155,7 @@ def test_declared_schema_keeps_field_metadata(spark, tmp_path):
 def test_dsv2_append_to_a_timestamp_ntz_table(spark, tmp_path):
     """The format writer's schema check reads the table's
     ``timestamp_ntz`` column as ``timestamp_ntz``, so the append lands,
-    and the format read equals ``TxTable.read()``. (No ``timestamp``
-    column: Spark writes it as INT96, which the format reader cannot
-    yet read back.)"""
+    and the format read equals ``TxTable.read()``."""
 
     def rows(lo, hi):
         return spark.sql(
@@ -179,6 +177,32 @@ def test_dsv2_append_to_a_timestamp_ntz_table(spark, tmp_path):
     exp = sorted(want.collect(), key=lambda r: r.k)
     assert got == exp
     assert [r.k for r in exp] == list(range(20))
+
+
+def test_format_read_of_a_spark_timestamp_column(spark, tmp_path):
+    """Spark writes ``timestamp`` as INT96, which pyarrow reads as
+    tz-naive nanoseconds; the format reader hands it to the Python
+    data source as UTC microseconds, so its read equals
+    ``TxTable.read()``, nulls and sub-second digits included."""
+    register_txlog_source(spark)
+    p = str(tmp_path / "t")
+    t = TxTable.create(spark, p, spark.sql(
+        "SELECT id AS k, IF(id = 3, NULL, timestamp'1969-12-31 23:59:59' "
+        "+ make_interval(0, 0, 0, id, 0, 0, id * 1.000001)) AS ts "
+        "FROM range(8)"
+    ).coalesce(1))
+    (name,) = t.snapshot_files()
+    footer = pq.ParquetFile(t._local_path(name)).schema
+    assert footer.column(footer.names.index("ts")).physical_type == "INT96"
+    fmt = spark.read.format("txlog").option("path", p).load()
+    want = t.read()
+    assert fmt.schema == want.schema
+    assert sorted(fmt.collect()) == sorted(want.collect())
+    # the change feed's Arrow tasks read through the same scan
+    feed = spark.read.format("txlog").option("path", p).option(
+        "readChangeFeed", "true"
+    ).option("startingVersion", 0).load()
+    assert sorted(feed.collect()) == sorted(t.read_changes("k", -1).collect())
 
 
 def test_table_read_uses_the_declared_schema(spark, parts):
@@ -265,7 +289,7 @@ def test_read_plan_scans_each_file_class_once(spark, tmp_path):
     for m, r in ((7, 0), (5, 1)):
         t.delete_where(f"k % {m} = {r}", mode="dv")
         want = {k: v for k, v in want.items() if k % m != r}
-    stacks = t._snapshot_dv()
+    stacks = t._snapshot().dv
     assert sum(len(ps) == 2 for ps in stacks.values()) >= 2, stacks
     t.merge_upsert(rows(40, 52, bump=1), key="k", mode="mor")
     want.update({k: k * 10 + 1 for k in range(40, 52)})
@@ -282,7 +306,7 @@ def test_read_plan_scans_each_file_class_once(spark, tmp_path):
     t.merge_upsert(rows(45, 65, bump=2), key="k", mode="mor")
     want.update({k: k * 10 for k in range(60, 70)})
     want.update({k: k * 10 + 2 for k in range(45, 65)})
-    assert len(t._snapshot_mor()[1]) == 2
+    assert len(t._snapshot().deletes) == 2
     assert check() == first
 
 

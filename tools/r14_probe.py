@@ -58,7 +58,9 @@ def planned(path: str, start: int, end: int) -> int:
     t = TxTable(None, path)
     return len([
         q
-        for q in TX._plan_cdf_partitions(t, path, start, end, "k")
+        for q in TX._plan_cdf_partitions(
+            t, path, t._snapshot(start), end, "k"
+        )[0]
         if q.kind in ("cow", "mor")
     ])
 
