@@ -192,6 +192,10 @@ _READER_PROTOCOL = 4
 # exact. Deliberately NOT "*.json": old _versions() int-parses every
 # .json that isn't *.checkpoint.json and would crash on the name.
 _CK_V3_SUFFIX = ".checkpoint.v3"
+# Table metadata checkpoints consolidate next to the live files (each
+# field joined the record in a later revision); a record lacking any
+# of them does not seed a replay.
+_CK_METADATA = ("constraints", "txns", "partition_by", "bloom_by")
 
 
 # Upper bound on a CoW change-feed commit's key-range buckets: keeps
@@ -764,20 +768,29 @@ class _TableState:
     a new state, so a lazy plan or a planner cache holding a state
     never sees a later fold.
 
-    * ``entries`` — live data files ``(file, stats, added_at)``; the
-      add version scopes equality deletes: a delete file at version d
+    * ``entries`` — live data files ``(file, stats, added_at)`` in
+      fold order, so the newest live add is the last entry; the add
+      version scopes equality deletes: a delete file at version d
       erases matching keys ONLY from files added before d (a later
       merge's own adds carry the fresh rows for the same keys).
     * ``deletes`` — live equality-delete files ``(delete_file,
       version, key)``.
     * ``dv`` — deletion-vector stacks ``{data_file: (dv_part, ...)}``:
       a file's logically-deleted row positions are the union of its
-      stacked parts (each a parquet of (file, pos) rows)."""
+      stacked parts (each a parquet of (file, pos) rows).
+    * ``constraints`` — active CHECK constraints ``{name: expr}``.
+    * ``txns`` — newest streaming-transaction batch id per app.
+    * ``partition_by`` / ``bloom_by`` — the create record's partition
+      and bloom-indexed columns."""
 
     version: int = -1
     entries: tuple = ()
     deletes: tuple = ()
     dv: dict = field(default_factory=dict)
+    constraints: dict = field(default_factory=dict)
+    txns: dict = field(default_factory=dict)
+    partition_by: tuple = ()
+    bloom_by: tuple = ()
 
     @classmethod
     def from_checkpoint(cls, version: int, data: dict) -> "_TableState":
@@ -790,7 +803,12 @@ class _TableState:
         later delete is strictly newer, so the scoping stays exact.
         Consolidated vector stacks ride under ``dv`` (r12); pre-r12
         checkpoints refused pending vectors, so their absent field
-        correctly seeds empty."""
+        correctly seeds empty. A record written before constraints,
+        txns and the birth columns rode checkpoints (pre-r9/r10) is
+        no seed at all: the genesis state comes back, so the caller
+        folds the whole log — slow but exact."""
+        if not all(f in data for f in _CK_METADATA):
+            return cls()
         eq = data.get("eq") or {}
         added_at = eq.get("added_at") or {}
         return cls(
@@ -802,6 +820,10 @@ class _TableState:
             ),
             tuple((f, int(d), k) for f, d, k in eq.get("deletes") or ()),
             {f: tuple(ps) for f, ps in (data.get("dv") or {}).items()},
+            dict(data["constraints"]),
+            dict(data["txns"]),
+            tuple(data["partition_by"]),
+            tuple(data["bloom_by"]),
         )
 
     def apply(self, version: int, act: dict) -> "_TableState":
@@ -814,7 +836,10 @@ class _TableState:
         its per-file incremental part to the file's stack (r12 — each
         commit writes only the newly-deleted positions); pre-r12
         commits, recognized by their ``dv_prev`` field, were
-        CUMULATIVE and REPLACE the stack."""
+        CUMULATIVE and REPLACE the stack. Constraint commits add or
+        drop one constraint, a ``txn`` stamp max-merges into its
+        app's watermark, and the create record sets the birth
+        columns; nothing else (``restore`` included) touches them."""
         removed = set(act["removes"])
         entries, deletes, dv = self.entries, self.deletes, self.dv
         if removed:
@@ -833,7 +858,24 @@ class _TableState:
                 dv[f] = (
                     (part,) if "dv_prev" in act else dv.get(f, ()) + (part,)
                 )
-        return _TableState(version, entries, deletes, dv)
+        constraints, txns = self.constraints, self.txns
+        pby, bby = self.partition_by, self.bloom_by
+        if act["op"] == "add-constraint":
+            c = act["constraint"]
+            constraints = {**constraints, c["name"]: c["expr"]}
+        elif act["op"] == "drop-constraint":
+            constraints = dict(constraints)
+            constraints.pop(act["constraint"]["name"], None)
+        elif act["op"] == "create":
+            pby = tuple(act.get("partition_by") or ())
+            bby = tuple(act.get("bloom_by") or ())
+        txn = act.get("txn")
+        if txn:
+            batch = max(txns.get(txn["app"], -1), int(txn["batch"]))
+            txns = {**txns, txn["app"]: batch}
+        return _TableState(
+            version, entries, deletes, dv, constraints, txns, pby, bby
+        )
 
     @property
     def files(self) -> list[str]:
@@ -908,50 +950,35 @@ class TxTable:
         self._last_partition_values: dict[str, dict] = {}
         # published commit records are IMMUTABLE (publish_exclusive
         # installs each version exactly once, vacuum never touches the
-        # log), so actions memoize per handle — every metadata walk
-        # (snapshot, MoR, DV, constraints, txns) re-reads the same
-        # JSON records otherwise, and read() runs two walks. Memory is
-        # O(walked commits) per handle, the same order the walks
-        # themselves materialize transiently; checkpoints bound both.
+        # log), so actions memoize per handle — every replay past the
+        # checkpoint (snapshots, change feeds, rebase checks) re-reads
+        # the same JSON records otherwise. Memory is O(replayed
+        # commits) per handle; checkpoints bound it.
         self._action_cache: dict[int, dict] = {}
-
-    def _birth_meta(self, field: str, attr: str) -> list[str]:
-        """Shared lookup for table-birth metadata fields (partition /
-        bloom columns): memoized, served from the newest checkpoint
-        when one carries the field (checkpoints consolidate ALL
-        per-write metadata walks; reading genesis here would break the
-        O(commits-since-checkpoint) replay bound every write path
-        relies on), genesis-read fallback for checkpoints written
-        before the field existed — falling back rather than assuming
-        []."""
-        if getattr(self, attr) is None:
-            try:
-                ck = self._latest_checkpoint_raw(self.latest_version())
-            except FileNotFoundError:
-                return []
-            if ck is not None and field in ck[1]:
-                setattr(self, attr, ck[1][field])
-            else:
-                try:
-                    setattr(
-                        self, attr, self._read_action(0).get(field, [])
-                    )
-                except FileNotFoundError:
-                    return []
-        return getattr(self, attr)
 
     def partition_by(self) -> list[str]:
         """The table's partition columns, recorded once in the create
         commit (Delta's metaData.partitionColumns analog); [] for an
-        unpartitioned table. The create record is immutable — see
-        :meth:`_birth_meta` for the memoize/checkpoint rule."""
-        return self._birth_meta("partition_by", "_partition_cols")
+        unpartitioned table or none at all. The create record is
+        immutable, so the columns memoize per handle, filled by the
+        first replay (:meth:`_snapshot`)."""
+        if self._partition_cols is None:
+            try:
+                self._snapshot()
+            except FileNotFoundError:
+                return []
+        return self._partition_cols
 
     def bloom_by(self) -> list[str]:
         """The table's bloom-indexed columns, recorded once in the
         create commit (the Delta bloom-filter-index analog); [] when
         none. Same rule as :meth:`partition_by`."""
-        return self._birth_meta("bloom_by", "_bloom_cols")
+        if self._bloom_cols is None:
+            try:
+                self._snapshot()
+            except FileNotFoundError:
+                return []
+        return self._bloom_cols
 
     # -- log primitives ----------------------------------------------------
 
@@ -1081,7 +1108,7 @@ class TxTable:
         reads — timestamps don't ride checkpoints (consolidating them
         would fix the walk but not the can't-bisect rule); acceptable
         because timestamp travel is an interactive operation, not a
-        per-write path like the _birth_meta walks."""
+        per-write path."""
         best = None
         for v in self._versions():
             if self._read_action(v).get("ts", 0.0) <= ts:
@@ -1179,7 +1206,8 @@ class TxTable:
         same consolidation rule the public formats use. The seeded
         fold equals the genesis fold (``added_at`` of files no live
         delete can reach aside — see
-        :meth:`_TableState.from_checkpoint`)."""
+        :meth:`_TableState.from_checkpoint`). The replay also fills
+        the handle's birth-column memos (:meth:`partition_by`)."""
         if version is None:
             version = self.latest_version()
         ck = self._latest_checkpoint_raw(version)
@@ -1187,6 +1215,9 @@ class TxTable:
         for v in self._versions():
             if state.version < v <= version:
                 state = state.apply(v, self._read_action(v))
+        if self._partition_cols is None and state.version >= 0:
+            self._partition_cols = list(state.partition_by)
+            self._bloom_cols = list(state.bloom_by)
         return state
 
     def _require_no_pending_deletes(
@@ -1299,9 +1330,14 @@ class TxTable:
         would from genesis. Stamped ``_EQ_CHECKPOINT_PROTOCOL``; an
         older engine (which would seed the delete list empty) refuses
         on the protocol field — and pre-r13 engines never discover the
-        file at all."""
-        v = self.latest_version()
-        s = self._snapshot(v)
+        file at all.
+
+        The table metadata rides along too (``_CK_METADATA``): the
+        CHECK constraints and txn watermarks every write path reads,
+        and the create record's partition and bloom columns, so a
+        replay seeded here never walks below it."""
+        s = self._snapshot()
+        v = s.version
         dv_extra: dict = {}
         if s.dv:
             # every dv-carrying checkpoint needs the stack-replay
@@ -1332,22 +1368,10 @@ class TxTable:
                     "live": [
                         {"file": f, "stats": st} for f, st, _ in s.entries
                     ],
-                    # Active CHECK constraints ride along so the
-                    # constraints() walk — which EVERY write path runs —
-                    # also replays O(commits since checkpoint) instead
-                    # of O(all commits): without this, a long-lived
-                    # table pays a full-genesis JSON walk per append.
-                    "constraints": self.constraints(v),
-                    # Streaming-transaction watermarks too: a long-lived
-                    # streaming sink calls last_txn() every micro-batch.
-                    "txns": self.txns(v),
-                    # Partition columns ride along for the same reason:
-                    # partition_by() runs on every write and must not
-                    # walk below the checkpoint to genesis.
-                    "partition_by": self.partition_by(),
-                    # Bloom-indexed columns likewise (consulted by
-                    # _file_stats on every write).
-                    "bloom_by": self.bloom_by(),
+                    "constraints": s.constraints,
+                    "txns": s.txns,
+                    "partition_by": list(s.partition_by),
+                    "bloom_by": list(s.bloom_by),
                 },
                 fh,
             )
@@ -1784,19 +1808,14 @@ class TxTable:
         session (the DSv2 writer's commit hook has none) — converted
         the way a scan declares it (:func:`_parquet_read_schema`), so
         a ``timestamp_ntz`` column reads back as ``timestamp_ntz``."""
-        live = self.snapshot_files(version)
-        if not live:
+        return self._state_schema(self._snapshot(version))
+
+    def _state_schema(self, state: _TableState):
+        """:meth:`write_schema` of a replayed state: the footer of its
+        newest live add, which the fold keeps last."""
+        if not state.entries:
             return None
-        last_live = set(live)
-        newest = None
-        for v in reversed(self._versions()):
-            if version is not None and v > version:
-                continue
-            adds = [f for f in self._read_action(v)["adds"] if f in last_live]
-            if adds:
-                newest = adds[-1]
-                break
-        return _parquet_read_schema([self._local_path(newest or live[-1])])
+        return _parquet_read_schema([self._local_path(state.entries[-1][0])])
 
     def _schema_file(self) -> str:
         """A part that carries the table's row schema when the snapshot
@@ -1892,16 +1911,16 @@ class TxTable:
         into evolution; type conflicts always refuse.
         merge_upsert/delete_where run the richer conflict-scoped
         rebase instead (module docstring)."""
-        cur = self.write_schema()
+        s = self._snapshot()
+        cur = self._state_schema(s)
         if cur is not None:
             self._check_schema(cur, df.schema, merge_schema, "append")
-        validated_at = self.latest_version()
-        self._enforce_constraints(df, "append")
+        self._enforce_constraints(df, "append", s.constraints)
         adds = self._write_parts(df)
         return self._commit_append(
             adds,
             max_commit_retries,
-            validated_at=validated_at,
+            validated_at=s.version,
             revalidate=lambda: self._enforce_constraints(df, "append"),
         )
 
@@ -1982,31 +2001,9 @@ class TxTable:
 
     def constraints(self, version: int | None = None) -> dict[str, str]:
         """Active CHECK constraints at ``version``: name → SQL boolean
-        expression. Replay starts from the newest checkpoint at or
-        below ``version`` when it carries a consolidated constraint
-        map (checkpoints written before round 9 don't — those fall
-        back to the genesis walk), so the per-write metadata read is
-        O(commits since checkpoint), the same bound snapshot replay
-        gets."""
-        if version is None:
-            version = self.latest_version()
-        out: dict[str, str] = {}
-        start = 0
-        ck = self._latest_checkpoint_raw(version)
-        if ck is not None and "constraints" in ck[1]:
-            out = dict(ck[1]["constraints"])
-            start = ck[0] + 1
-        for v in self._versions():
-            if v < start:
-                continue
-            if v > version:
-                break
-            act = self._read_action(v)
-            if act["op"] == "add-constraint":
-                out[act["constraint"]["name"]] = act["constraint"]["expr"]
-            elif act["op"] == "drop-constraint":
-                out.pop(act["constraint"]["name"], None)
-        return out
+        expression, from the snapshot's replay (checkpoints carry the
+        consolidated map)."""
+        return dict(self._snapshot(version).constraints)
 
     # -- streaming-writer transaction ids --------------------------------------
 
@@ -2018,27 +2015,9 @@ class TxTable:
         between the sink commit and the engine checkpoint advancing)
         consults this map and skips batch ids it already committed —
         exactly-once by recorded id, not by hoping the merge is
-        idempotent. Replay starts from the newest checkpoint's
-        consolidated map when present (checkpoints older than r10
-        fall back to the genesis walk, same rule as constraints())."""
-        if version is None:
-            version = self.latest_version()
-        out: dict[str, int] = {}
-        start = 0
-        ck = self._latest_checkpoint_raw(version)
-        if ck is not None and "txns" in ck[1]:
-            out = dict(ck[1]["txns"])
-            start = ck[0] + 1
-        for v in self._versions():
-            if v < start:
-                continue
-            if v > version:
-                break
-            txn = self._read_action(v).get("txn")
-            if txn:
-                prev = out.get(txn["app"], -1)
-                out[txn["app"]] = max(prev, int(txn["batch"]))
-        return out
+        idempotent. Read from the snapshot's replay, like
+        :meth:`constraints`."""
+        return dict(self._snapshot(version).txns)
 
     def last_txn(self, app: str) -> int | None:
         """The newest committed batch id for ``app``, or None."""
@@ -2056,15 +2035,18 @@ class TxTable:
                 return name
         return None
 
-    def _enforce_constraints(self, df: DataFrame, what: str) -> None:
-        exprs = self.constraints()
-        if not exprs:
-            return
+    def _enforce_constraints(
+        self, df: DataFrame, what: str, exprs: dict | None = None
+    ) -> None:
+        """Validate ``df`` against ``exprs``, the constraints of the
+        state the caller bound (default: the latest)."""
+        if exprs is None:
+            exprs = self.constraints()
         name = self._violations(df, exprs)
         if name is not None:
             raise ValueError(
                 f"{what} violates CHECK constraint '{name}' "
-                f"({self.constraints()[name]}); no commit was made"
+                f"({exprs[name]}); no commit was made"
             )
 
     def _assert_ansi_portable(self, name: str, expr: str) -> None:
@@ -2280,15 +2262,16 @@ class TxTable:
         # the adds write materializes anyway); eager=False defers it to
         # the bounds probe, so an empty/no-op merge pays nothing extra.
         updates = updates.localCheckpoint(eager=False)
-        v = self.latest_version()
-        if mode == "cow":
-            # CoW candidate reads open raw data files; pending equality
-            # deletes would resurrect erased rows in the rewrite.
-            # Checked at THE version this transaction binds to (and
-            # scans), never a separately-resolved latest.
-            state = self._require_no_pending_deletes(
-                "merge_upsert(mode='cow')", v
-            )
+        # CoW candidate reads open raw data files; pending equality
+        # deletes would resurrect erased rows in the rewrite. Checked
+        # at THE version this transaction binds to (and scans, and
+        # validates constraints at), never a separately-resolved latest.
+        state = (
+            self._require_no_pending_deletes("merge_upsert(mode='cow')")
+            if mode == "cow"
+            else self._snapshot()
+        )
+        v = state.version
         bounds = updates.agg(
             F.min(key).alias("lo"),
             F.max(key).alias("hi"),
@@ -2309,7 +2292,9 @@ class TxTable:
             )
         if bounds["lo"] is None:
             return v  # empty update set: no-op, no version burned
-        self._enforce_constraints(updates, f"merge_upsert(mode={mode!r})")
+        self._enforce_constraints(
+            updates, f"merge_upsert(mode={mode!r})", state.constraints
+        )
         if mode == "mor":
             # range-cluster the written files by the merge key (r14):
             # a hash-shuffled upsert's natural layout gives every add
@@ -2483,15 +2468,8 @@ class TxTable:
             # SQL-string predicates are first-class (update_where and
             # the CoW survivor rewrite's ~condition need a Column)
             condition = F.expr(condition)
-        if partition_filter:
-            cond = condition
-            for c, pv in partition_filter.items():
-                cond = cond & (
-                    F.col(c).isNull()
-                    if pv is None
-                    else F.col(c).eqNullSafe(F.lit(pv))
-                )
-            condition = cond
+        for pred in _equalities(partition_filter):
+            condition = condition & pred
         if mode == "dv":
             v = self.latest_version()
             s = self._snapshot(v)
@@ -2503,11 +2481,10 @@ class TxTable:
                 )
             dv_map = s.dv
             entries = s.entries
-            if partition_filter:
-                entries = [
-                    e for e in entries
-                    if self._partition_match(e[1], partition_filter)
-                ]
+            entries = [
+                e for e in entries
+                if _stats_admit(e[1], partition_filter, None, None)
+            ]
             live = [f for f, _, _ in entries]
             if not live:
                 return v
@@ -2675,11 +2652,10 @@ class TxTable:
             )
         v = self.latest_version()
         entries = self._require_no_pending_deletes("delete_where", v).entries
-        if partition_filter:
-            entries = [
-                e for e in entries
-                if self._partition_match(e[1], partition_filter)
-            ]
+        entries = [
+            e for e in entries
+            if _stats_admit(e[1], partition_filter, None, None)
+        ]
         live = [f for f, _, _ in entries]
         cur = self._read_files(live)
         touched = [
@@ -2773,29 +2749,21 @@ class TxTable:
                 f"update_where: SET touches partition_filter column(s) "
                 f"{bad} — the filter would contradict the assignment"
             )
-        if partition_filter:
-            cond = (
-                F.expr(condition) if isinstance(condition, str) else condition
-            )
-            for c, pv in partition_filter.items():
-                cond = cond & (
-                    F.col(c).isNull()
-                    if pv is None
-                    else F.col(c).eqNullSafe(F.lit(pv))
-                )
-            condition = cond
+        if isinstance(condition, str):
+            condition = F.expr(condition)
+        for pred in _equalities(partition_filter):
+            condition = condition & pred
         if mode == "dv":
             return self._update_where_dv(
                 condition, set_exprs, partition_filter,
                 max_matched_fraction,
             )
-        v = self.latest_version()
-        entries = self._require_no_pending_deletes("update_where", v).entries
-        if partition_filter:
-            entries = [
-                e for e in entries
-                if self._partition_match(e[1], partition_filter)
-            ]
+        state = self._require_no_pending_deletes("update_where")
+        v = state.version
+        entries = [
+            e for e in state.entries
+            if _stats_admit(e[1], partition_filter, None, None)
+        ]
         live = [f for f, _, _ in entries]
         cur = self._read_files(live)
         unknown = [c for c in set_exprs if c not in cur.columns]
@@ -2816,10 +2784,7 @@ class TxTable:
         ]
         if not touched:
             return v  # no-op updates don't burn a version
-        marked = self._read_files(touched).withColumn(
-            "__upd",
-            F.expr(condition) if isinstance(condition, str) else condition,
-        )
+        marked = self._read_files(touched).withColumn("__upd", condition)
         rewritten = marked.select(
             *[
                 F.when(F.col("__upd"), F.expr(set_exprs[c]))
@@ -2833,7 +2798,8 @@ class TxTable:
             "__upd",
         )
         self._enforce_constraints(
-            rewritten.filter("__upd").drop("__upd"), "update_where"
+            rewritten.filter("__upd").drop("__upd"), "update_where",
+            state.constraints,
         )
         adds = self._write_parts(rewritten.drop("__upd"))
 
@@ -2861,8 +2827,8 @@ class TxTable:
         """The merge-on-read UPDATE body (see :meth:`update_where`
         ``mode="dv"``): one commit = per-file incremental deletion
         vectors over the matched positions + new parts holding the
-        transformed rows. The predicate/partition_filter conjunction
-        already happened in the caller."""
+        transformed rows. The caller already made ``condition`` a
+        Column conjoined with the partition_filter."""
         v = self.latest_version()
         s = self._snapshot(v)
         if s.deletes:
@@ -2871,14 +2837,12 @@ class TxTable:
                 "equality deletes is not supported — run optimize() "
                 "to fold them first"
             )
-        cond = F.expr(condition) if isinstance(condition, str) else condition
         dv_map = s.dv
         entries = s.entries
-        if partition_filter:
-            entries = [
-                e for e in entries
-                if self._partition_match(e[1], partition_filter)
-            ]
+        entries = [
+            e for e in entries
+            if _stats_admit(e[1], partition_filter, None, None)
+        ]
         live = [f for f, _, _ in entries]
         if not live:
             return v
@@ -2902,7 +2866,7 @@ class TxTable:
         # guard/constraint refusal deletes the just-written
         # (uncommitted, unreferenced) parts to keep the "no commit was
         # made" promise.
-        matched = scan.filter(F.coalesce(cond, F.lit(False))).persist()
+        matched = scan.filter(F.coalesce(condition, F.lit(False))).persist()
         adds: list[str] = []
         try:
             # one incremental part per touched file, in parallel —
@@ -2933,7 +2897,7 @@ class TxTable:
                     ]
                 )
                 self._enforce_constraints(
-                    updated, "update_where(mode='dv')"
+                    updated, "update_where(mode='dv')", s.constraints
                 )
                 adds = self._write_parts(updated)
                 stacked = any(f in dv_map for f in mapping)
@@ -3219,13 +3183,6 @@ class TxTable:
                 "range_filter must be {column: {op: scalar}} with ops "
                 f"in {_RANGE_OPS}, got {range_filter!r}"
             )
-        if range_filter:
-            # float/double columns refuse at plan time (r14): the
-            # logged [min, max] stats this prunes on exclude NaN, so
-            # a file whose only match is a NaN row (which Spark's
-            # NaN-ranks-greatest semantics ADMIT for >=/>) could be
-            # dropped — one footer read types the columns
-            _refuse_float_range(range_filter, self.write_schema())
 
         def _row_filter(df: DataFrame) -> DataFrame:
             # Conjoin BOTH dicts predicate-by-predicate (no dict
@@ -3237,12 +3194,8 @@ class TxTable:
             # advisor: contradictory filters returned rows from
             # files with no recorded partition values).
             for flt in (partition_filter, eq_filter):
-                for c, v in (flt or {}).items():
-                    df = df.filter(
-                        F.col(c).isNull()
-                        if v is None
-                        else F.col(c).eqNullSafe(F.lit(v))
-                    )
+                for pred in _equalities(flt):
+                    df = df.filter(pred)
             ops_col = {
                 ">=": lambda c, v: c >= v,
                 ">": lambda c, v: c > v,
@@ -3261,6 +3214,13 @@ class TxTable:
         # driver-side. States are immutable, so later folding never
         # reaches this plan.
         s = _state if _state is not None else self._snapshot(version)
+        if range_filter:
+            # float/double columns refuse at plan time (r14): the
+            # logged [min, max] stats this prunes on exclude NaN, so
+            # a file whose only match is a NaN row (which Spark's
+            # NaN-ranks-greatest semantics ADMIT for >=/>) could be
+            # dropped — one footer read of the read state types them
+            _refuse_float_range(range_filter, self._state_schema(s))
         entries, deletes, dv_map = s.entries, s.deletes, s.dv
         if _files_subset is not None:
             # INTERNAL (read_changes' merge-on-read pre-image scan):
@@ -3269,20 +3229,10 @@ class TxTable:
             # provably matches nothing in the dropped files (the same
             # prove-only contract as eq_filter pruning below)
             entries = [e for e in entries if e[0] in _files_subset]
-        if eq_filter:
-            entries = [e for e in entries if _eq_stats_match(e[1], eq_filter)]
-        if range_filter:
-            entries = [
-                e
-                for e in entries
-                if _range_stats_match(e[1], range_filter)
-            ]
-        if partition_filter:
-            entries = [
-                e
-                for e in entries
-                if self._partition_match(e[1], partition_filter)
-            ]
+        entries = [
+            e for e in entries
+            if _stats_admit(e[1], partition_filter, eq_filter, range_filter)
+        ]
         if not deletes:
             return _row_filter(
                 self._scan_with_dv(
@@ -3833,20 +3783,24 @@ class TxTable:
         if not dry_run:
             for f in removed:
                 self.file_store.delete(self.path, f)
-        # Crashed DSv2 writer tasks can leave .wtmp- scratch files in
-        # the table root (the task-local stage before store.put); they
-        # are POSIX-protocol artifacts outside the store's part
-        # namespace, swept here under the same age guard.
-        if os.path.isdir(self.path):
-            for f in os.listdir(self.path):
-                if not f.startswith(".wtmp-"):
+        # Crashes leave staged local files behind: DSv2 writer tasks
+        # their .wtmp- scratch parts in the table root (the stage
+        # before store.put), _commit and checkpoint() their .tmp-*.json
+        # records in the log dir (the stage before publish_exclusive).
+        # Both sit outside the stores' namespaces and are swept here
+        # under the same age guard, reported relative to the root.
+        for d, pre, suf in (
+            (self.path, ".wtmp-", ""), (self.log_dir, ".tmp-", ".json")
+        ):
+            for f in os.listdir(d) if os.path.isdir(d) else ():
+                if not (f.startswith(pre) and f.endswith(suf)):
                     continue
-                full = os.path.join(self.path, f)
+                full = os.path.join(d, f)
                 if min_age_seconds > 0 and os.path.getmtime(full) > cutoff:
                     continue
                 if not dry_run:
                     os.remove(full)
-                removed.append(f)
+                removed.append(os.path.relpath(full, self.path))
         return removed
 
 
@@ -4021,10 +3975,12 @@ class TxLogBatchWriter(DataSourceArrowWriter):
         # SQL strings — pickles with the writer). commit() re-checks
         # that no add-constraint landed since the bind, so a raced
         # constraint can never be skipped, only fail the job loudly.
+        # The schema check and the partition columns below read the
+        # same bound state (genesis when no table exists yet).
         t = TxTable(None, self.path)
-        vs = t._versions()
-        self._bound_version = vs[-1] if vs else -1
-        self._constraints = t.constraints() if vs else {}
+        s = t._snapshot() if t._versions() else _TableState()
+        self._bound_version = s.version
+        self._constraints = s.constraints
         # Manual idempotence (the public formats' txnAppId/txnVersion
         # pair for BATCH writes): when BOTH options are set, commit()
         # consults the recorded per-app watermark and lands nothing
@@ -4048,8 +4004,8 @@ class TxLogBatchWriter(DataSourceArrowWriter):
         # replaces the table wholesale, so it may change the schema
         # (the overwriteSchema shape); option("mergeSchema", "true")
         # opts an append into evolution.
-        if vs and not overwrite and schema is not None:
-            cur = t.write_schema()
+        if not overwrite and schema is not None:
+            cur = t._state_schema(s)
             if cur is not None:
                 allow = str(
                     options.get("mergeschema", "false")
@@ -4064,8 +4020,8 @@ class TxLogBatchWriter(DataSourceArrowWriter):
         # A conflicting redeclaration fails loudly.
         opt = options.get("partitionby")
         declared = [c.strip() for c in (opt or "").split(",") if c.strip()]
-        existing = t.partition_by() if vs else []
-        if vs and declared and declared != existing:
+        existing = list(s.partition_by)
+        if s.version >= 0 and declared and declared != existing:
             raise ValueError(
                 f"write.format('txlog') partitionBy={declared} conflicts "
                 f"with the table's recorded partition columns {existing}"
@@ -4220,7 +4176,6 @@ class TxLogBatchWriter(DataSourceArrowWriter):
         for m in messages:
             if m is not None:
                 t._last_partition_values.update(getattr(m, "values", {}))
-        t._partition_cols = list(self._pcols)
         # Metadata-only work from here on: _file_stats reads parquet
         # FOOTERS, the log walk reads JSON. Row validation already
         # happened inside each task's write(); if it raced an
@@ -4329,7 +4284,6 @@ class TxLogStreamWriter(TxLogBatchWriter, DataSourceStreamArrowWriter):
         for m in messages:
             if m is not None:
                 t._last_partition_values.update(getattr(m, "values", {}))
-        t._partition_cols = list(self._pcols)
         try:
             if not t._versions():
                 os.makedirs(self.path, exist_ok=True)
@@ -4533,6 +4487,32 @@ def _range_stats_match(stats: dict, rf: dict | None) -> bool:
         except TypeError:
             continue
     return True
+
+
+def _equalities(flt: dict | None) -> list:
+    """One row predicate per ``{col: value}`` pair: IS NULL for a None
+    value, else null-safe equality."""
+    return [
+        F.col(c).isNull() if v is None else F.col(c).eqNullSafe(F.lit(v))
+        for c, v in (flt or {}).items()
+    ]
+
+
+def _stats_admit(
+    stats: dict, partition_filter: dict | None, eq_filter: dict | None,
+    range_filter: dict | None,
+) -> bool:
+    """False iff a file's logged stats or partition values prove no
+    row can match the filters — the one pruning predicate of table,
+    format and stream reads (each re-filters the rows of kept files)."""
+    return (
+        _eq_stats_match(stats, eq_filter)
+        and _range_stats_match(stats, range_filter)
+        and (
+            not partition_filter
+            or TxTable._partition_match(stats, partition_filter)
+        )
+    )
 
 
 # The range-predicate operators the format-level reader accepts
@@ -5635,26 +5615,16 @@ class TxLogBatchReader(DataSourceReader):
                 )
                 if applicable:
                     dels_by_file[f] = applicable
-        if self.eq_filter:
-            entries = [
-                e for e in entries if _eq_stats_match(e[1], self.eq_filter)
-            ]
-        if self.range_filter:
-            # range predicates prune on the SAME logged [min, max]
-            # stats TxTable.read consults (r12 verdict ask #4): a file
-            # whose recorded range provably misses the predicate is
-            # dropped from the plan without being opened
-            entries = [
-                e
-                for e in entries
-                if _range_stats_match(e[1], self.range_filter)
-            ]
-        if self.partition_filter:
-            entries = [
-                e
-                for e in entries
-                if TxTable._partition_match(e[1], self.partition_filter)
-            ]
+        # the SAME prove-only pruning TxTable.read applies: a file
+        # whose logged stats or partition values exclude a predicate
+        # is dropped from the plan without being opened
+        entries = [
+            e for e in entries
+            if _stats_admit(
+                e[1], self.partition_filter, self.eq_filter,
+                self.range_filter,
+            )
+        ]
         # DELETION VECTORS resolve at PLAN time to REFERENCES: each
         # kept file's partition carries ((dv_part_path, ...), file_name);
         # the TASK reads its own positions and masks them Arrow-side
@@ -6049,13 +6019,9 @@ class TxLogStreamReader(DataSourceStreamReader):
                 # a file whose logged stats/partition values exclude
                 # every predicate never opens; kept files re-filter
                 # Arrow-side in read(), so missing stats only cost IO
-                if _eq_stats_match(st.get(f, {}), self.eq_filter)
-                and _range_stats_match(st.get(f, {}), self.range_filter)
-                and (
-                    not self.partition_filter
-                    or TxTable._partition_match(
-                        st.get(f, {}), self.partition_filter
-                    )
+                if _stats_admit(
+                    st.get(f, {}), self.partition_filter, self.eq_filter,
+                    self.range_filter,
                 )
             )
         return parts

@@ -1934,7 +1934,8 @@ def test_spark_writer_partition_by(spark, tmp_path):
 def _scoped(state):
     """A log state as reads see it: per live file its stats and the
     delete files that reach it (``added_at`` matters only through
-    that scoping), plus the live deletes and vector stacks."""
+    that scoping), plus the live deletes, vector stacks and table
+    metadata."""
     return (
         state.version,
         [
@@ -1943,7 +1944,17 @@ def _scoped(state):
         ],
         state.deletes,
         state.dv,
+        state.constraints,
+        state.txns,
+        state.partition_by,
+        state.bloom_by,
     )
+
+
+# CHECK constraints every row of the model test satisfies
+_MODEL_CHECKS = {
+    "k_nonneg": "k >= 0", "k_small": "k < 1000", "v_set": "v IS NOT NULL",
+}
 
 
 def test_txlog_random_ops_match_model(spark, tmp_path, log_store_mode):
@@ -1953,8 +1964,12 @@ def test_txlog_random_ops_match_model(spark, tmp_path, log_store_mode):
     reader must equal the model at EVERY version (time travel over
     the whole history), after every sequence, and the log state
     replayed from the newest checkpoint must equal the genesis fold
-    with checkpoints ignored. The strongest correctness harness for
-    the log-replay + CoW/MoR/deletion-vector machinery; the
+    with checkpoints ignored. A second generator interleaves
+    add/drop-constraint commits and txn-stamped merges (the first
+    one's op mix is left as it was): ``constraints(v)`` and
+    ``txns(v)`` must equal their models at every version (a restore
+    reverts neither). The strongest correctness harness
+    for the log-replay + CoW/MoR/deletion-vector machinery; the
     dirty-table guard matrix (equality deletes AND vectors) is
     asserted in-sequence."""
     import random
@@ -1969,21 +1984,59 @@ def test_txlog_random_ops_match_model(spark, tmp_path, log_store_mode):
     register_txlog_source(spark)
 
     rng = random.Random(9_2026)
+    meta_rng = random.Random(2026_9)
     for seq in range(3):
         p = str(tmp_path / f"t{seq}")
         model_hist = []  # model snapshot per version
         dirty_hist = []  # pending-MoR-deletes flag per version
         dv_hist = []     # pending-deletion-vector flag per version
+        meta_hist = []   # (constraints, txns) per version
         dirty = False
         dv_dirty = False
+        checks: dict[str, str] = {}
+        txns: dict[str, int] = {}
         model = {k: f"s{k}" for k in rng.sample(range(50), 8)}
         t = TxTable.create(
-            spark, p, _df(spark, sorted(model.items()))
+            spark, p, _df(spark, sorted(model.items())), bloom_by=["v"]
         )
         model_hist.append(dict(model))
         dirty_hist.append(False)
         dv_hist.append(False)
+        meta_hist.append(({}, {}))
         for _ in range(10):
+            meta = meta_rng.choice([None, None, "add", "drop", "txn"])
+            if meta == "add" and len(checks) < len(_MODEL_CHECKS):
+                name = meta_rng.choice(sorted(set(_MODEL_CHECKS) - set(checks)))
+                t.add_constraint(name, _MODEL_CHECKS[name])
+                checks[name] = _MODEL_CHECKS[name]
+            elif meta == "drop" and checks:
+                name = meta_rng.choice(sorted(checks))
+                t.drop_constraint(name)
+                checks.pop(name)
+            elif meta == "txn" and model and not (dv_dirty and not dirty):
+                # new values for existing keys only, so the first
+                # generator's draws see the same key set; merge-on-read
+                # while equality deletes are pending, else copy-on-write
+                upd = {
+                    k: f"t{k}{meta_rng.randint(0, 9)}"
+                    for k in meta_rng.sample(
+                        sorted(model), min(len(model), 3)
+                    )
+                }
+                app, batch = meta_rng.choice("ab"), meta_rng.randint(0, 20)
+                t.merge_upsert(
+                    _df(spark, sorted(upd.items())), "k",
+                    mode="mor" if dirty else "cow", txn=(app, batch),
+                )
+                model.update(upd)
+                txns[app] = max(txns.get(app, -1), batch)
+            else:
+                meta = None
+            if meta is not None:
+                model_hist.append(dict(model))
+                dirty_hist.append(dirty)
+                dv_hist.append(dv_dirty)
+                meta_hist.append((dict(checks), dict(txns)))
             op = rng.choice(
                 ["append", "merge", "merge_mor", "delete", "delete_dv",
                  "update_dv", "optimize", "checkpoint", "restore"]
@@ -2091,11 +2144,15 @@ def test_txlog_random_ops_match_model(spark, tmp_path, log_store_mode):
             model_hist.append(dict(model))
             dirty_hist.append(dirty)
             dv_hist.append(dv_dirty)
+            meta_hist.append((dict(checks), dict(txns)))
         genesis = _TableState()
         for v, want in enumerate(model_hist):
             got = {r["k"]: r["v"] for r in t.read(v).collect()}
             assert got == want, f"seq {seq} version {v}"
             assert t.count(v) == len(want), f"seq {seq} count at v{v}"
+            assert (t.constraints(v), t.txns(v)) == meta_hist[v], (
+                f"seq {seq} table metadata at v{v}"
+            )
             if log_store_mode == "posix":
                 # the format reader plans in a Python worker, which
                 # sees only the on-disk POSIX stores
@@ -2153,6 +2210,134 @@ def test_txlog_random_ops_match_model(spark, tmp_path, log_store_mode):
                 continue
             assert got == base, f"seq {seq} CDF parity ({v0}, {head}]"
             break
+
+
+def test_pre_metadata_checkpoint_replays_from_genesis(spark, tmp_path):
+    """A checkpoint record in the oldest shape (``version`` + ``live``
+    only, before constraints, txns and the birth columns rode along)
+    seeds no replay: a fresh handle folds from genesis, so it still
+    returns the genesis constraints, txns, partition and bloom columns
+    and the same rows."""
+    p = str(tmp_path / "t")
+    df = spark.createDataFrame(
+        [(1, "a", "x"), (2, "b", "y")], "k long, v string, p string"
+    )
+    t = TxTable.create(spark, p, df, partition_by=["p"], bloom_by=["v"])
+    t.add_constraint("k_pos", "k > 0")
+    t.merge_upsert(
+        spark.createDataFrame([(2, "B", "y")], "k long, v string, p string"),
+        "k", txn=("app", 3),
+    )
+    ck = t.checkpoint()
+    path = os.path.join(t.log_dir, f"{ck:08d}.checkpoint.json")
+    full = t.log_store.read_json(path)
+    t.log_store.put_json(path, {"version": ck, "live": full["live"]})
+    t.append(spark.createDataFrame([(3, "c", "x")], "k long, v string, p string"))
+
+    fresh = TxTable(spark, p)
+    assert fresh.constraints() == {"k_pos": "k > 0"}
+    assert fresh.txns() == {"app": 3}
+    assert fresh.partition_by() == ["p"]
+    assert fresh.bloom_by() == ["v"]
+    assert sorted(fresh.read().collect()) == sorted(t.read().collect())
+    assert sorted((r.k, r.v) for r in fresh.read().collect()) == [
+        (1, "a"), (2, "B"), (3, "c")
+    ]
+
+
+def test_restore_keeps_constraints_and_txns(spark, tmp_path):
+    """``restore`` brings back a version's files, not its metadata: the
+    constraints and txn watermarks stay as they are at the head."""
+    p = str(tmp_path / "t")
+    t = TxTable.create(spark, p, _df(spark, [(1, "a")]))
+    t.merge_upsert(_df(spark, [(1, "b")]), "k", txn=("app", 7))
+    t.add_constraint("k_pos", "k > 0")
+    t.restore(0)
+    assert t.constraints() == {"k_pos": "k > 0"}
+    assert t.txns() == {"app": 7}
+    assert t.checkpoint() == t.latest_version()
+    assert TxTable(spark, p).constraints() == {"k_pos": "k > 0"}
+
+
+def _walked_schema(t, version):
+    """The write schema by the reverse log walk: the newest version
+    with an add still live at ``version``, its last such add."""
+    from data_analyse_marche_emploi_spark.sources.txlog import (
+        _parquet_read_schema,
+    )
+
+    live = set(t.snapshot_files(version))
+    for w in range(version, -1, -1):
+        adds = [f for f in t._read_action(w)["adds"] if f in live]
+        if adds:
+            return _parquet_read_schema([t._local_path(adds[-1])])
+    return None
+
+
+def test_write_schema_is_the_newest_live_add(spark, tmp_path):
+    """Across schema-evolving appends, a CoW rewrite, a checkpoint and
+    a restore, ``write_schema(v)`` is at every version the footer of
+    the file the reverse log walk picks — through the writing handle
+    and through a fresh, checkpoint-seeded one."""
+    p = str(tmp_path / "t")
+    t = TxTable.create(spark, p, _df(spark, [(1, "a"), (2, "b")]))
+    t.append(
+        spark.createDataFrame([(3, "c", 1.5)], "k long, v string, x double"),
+        merge_schema=True,
+    )
+    t.append(
+        spark.createDataFrame([(4, "d", 7)], "k long, v string, y int"),
+        merge_schema=True,
+    )
+    t.delete_where("k = 4")
+    t.checkpoint()
+    t.restore(1)
+    t.append(
+        spark.createDataFrame(
+            [(5, "e", 2.5, 9)], "k long, v string, x double, y int"
+        ),
+        merge_schema=True,
+    )
+    t.merge_upsert(_df(spark, [(1, "A")]), "k")
+    fresh = TxTable(spark, p)
+    for v in range(t.latest_version() + 1):
+        want = _walked_schema(t, v)
+        assert want is not None
+        assert t.write_schema(v) == want, f"v{v}"
+        assert fresh.write_schema(v) == want, f"fresh v{v}"
+    assert [f.name for f in t.write_schema(2).fields] == ["k", "v", "y"]
+
+
+def test_vacuum_sweeps_orphaned_log_records(spark, tmp_path):
+    """A commit or checkpoint that crashes between staging its
+    ``.tmp-*.json`` record and publishing it leaves the record in the
+    log dir; vacuum reclaims it under the same age guard and dry-run
+    reporting as part files, and never touches a published record."""
+    p = str(tmp_path / "t")
+    t = TxTable.create(spark, p, _df(spark, [(1, "a")]))
+    t.append(_df(spark, [(2, "b")]))
+    t.checkpoint()
+    os.makedirs(t.log_dir, exist_ok=True)
+    old = os.path.join(t.log_dir, ".tmp-crashed.json")
+    young = os.path.join(t.log_dir, ".tmp-inflight.json")
+    for f in (old, young):
+        with open(f, "w") as fh:
+            fh.write("{}")
+    os.utime(old, (1, 1))  # ancient mtime
+    published = sorted(t.log_store.list_log(t.log_dir))
+
+    rel = lambda f: os.path.join("_txlog", os.path.basename(f))  # noqa: E731
+    dry = t.vacuum(min_age_seconds=3600, dry_run=True)
+    assert rel(old) in dry and rel(young) not in dry
+    assert os.path.exists(old)
+    removed = t.vacuum(min_age_seconds=3600)
+    assert rel(old) in removed and rel(young) not in removed
+    assert not os.path.exists(old) and os.path.exists(young)
+    assert rel(young) in t.vacuum()
+    assert not os.path.exists(young)
+    after = sorted(t.log_store.list_log(t.log_dir))
+    assert after == [f for f in published if not f.startswith(".tmp-")]
+    assert sorted(r.k for r in t.read().collect()) == [1, 2]
 
 
 def test_optimize_bin_packs_incrementally(spark, tmp_path):

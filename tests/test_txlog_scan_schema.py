@@ -8,6 +8,7 @@ the number of scans a snapshot read plans."""
 
 from __future__ import annotations
 
+import functools
 import os
 import random
 import re
@@ -22,6 +23,7 @@ from data_analyse_marche_emploi_spark.sources.txlog import (
     FileStore,
     InMemoryFileStore,
     PosixFileStore,
+    PosixLogStore,
     TxTable,
     _parquet_read_schema,
     register_txlog_source,
@@ -232,21 +234,17 @@ JOB_BUDGET = {
 }
 
 
-def test_txlog_op_job_budget(spark, tmp_path):
-    """One DML cycle of the txlog benchmark workload, on the orders
-    fixture: each op launches exactly its budgeted jobs."""
-    orders = tables.load_table(spark, SF_SMOKE, "orders").withColumn(
-        "o_orderdate", F.col("o_orderdate").cast("date")
+def _keys(orders, lo, hi, shift=0, price=0.0):
+    df = orders.filter((F.col(KEY) >= lo) & (F.col(KEY) < hi))
+    return df.withColumn(KEY, F.col(KEY) + shift).withColumn(
+        "o_totalprice", F.col("o_totalprice") + price
     )
 
-    def keys(lo, hi, shift=0, price=0.0):
-        df = orders.filter((F.col(KEY) >= lo) & (F.col(KEY) < hi))
-        return df.withColumn(KEY, F.col(KEY) + shift).withColumn(
-            "o_totalprice", F.col("o_totalprice") + price
-        )
 
-    t = TxTable.create(spark, str(tmp_path / "t"), keys(0, 1000))
-    ops = {
+def _dml_cycle(t: TxTable, orders) -> dict:
+    """The txlog benchmark workload's DML cycle on ``t``, op by op."""
+    keys = functools.partial(_keys, orders)
+    return {
         "append": lambda: t.append(keys(1000, 1100, shift=10**7)),
         "merge_cow": lambda: t.merge_upsert(
             keys(100, 300, price=1.0), key=KEY, mode="cow"
@@ -261,8 +259,61 @@ def test_txlog_op_job_budget(spark, tmp_path):
         "read": t.read,
         "optimize": t.optimize,
     }
+
+
+def _orders(spark):
+    return tables.load_table(spark, SF_SMOKE, "orders").withColumn(
+        "o_orderdate", F.col("o_orderdate").cast("date")
+    )
+
+
+def test_txlog_op_job_budget(spark, tmp_path):
+    """One DML cycle of the txlog benchmark workload, on the orders
+    fixture: each op launches exactly its budgeted jobs."""
+    orders = _orders(spark)
+    t = TxTable.create(spark, str(tmp_path / "t"), _keys(orders, 0, 1000))
+    ops = _dml_cycle(t, orders)
     jobs = {name: jobs_in_group(spark, op) for name, op in ops.items()}
     assert jobs == JOB_BUDGET
+
+
+# checkpoint records read per op, on a checkpointed table: each op
+# replays the log once. A budget may go down, never up.
+REPLAY_BUDGET = {op: 1 for op in (*JOB_BUDGET, "checkpoint", "vacuum")}
+
+
+class _CheckpointReads(PosixLogStore):
+    """Counts the checkpoint records the engine reads."""
+
+    def __init__(self):
+        self.reads = 0
+
+    def read_json(self, path: str) -> dict:
+        self.reads += ".checkpoint." in os.path.basename(path)
+        return super().read_json(path)
+
+
+def test_txlog_op_replay_budget(spark, tmp_path):
+    """The same cycle plus checkpoint and vacuum, on a table that was
+    checkpointed first, through a fresh handle: every op reads the
+    checkpoint record once, so its constraints, txns, schema and
+    partition columns come from the one replay its snapshot runs."""
+    orders = _orders(spark)
+    p = str(tmp_path / "t")
+    TxTable.create(spark, p, _keys(orders, 0, 1000)).checkpoint()
+    store = _CheckpointReads()
+    t = TxTable(spark, p, log_store=store)
+    ops = {
+        **_dml_cycle(t, orders),
+        "checkpoint": t.checkpoint,
+        "vacuum": lambda: t.vacuum(keep_versions=2),
+    }
+    reads = {}
+    for name, op in ops.items():
+        before = store.reads
+        op()
+        reads[name] = store.reads - before
+    assert reads == REPLAY_BUDGET
 
 
 def _parquet_relations(df) -> int:
