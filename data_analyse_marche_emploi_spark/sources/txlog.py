@@ -57,7 +57,7 @@ import time
 import uuid
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 __all__ = [
     "LogStore",
@@ -235,6 +235,16 @@ _COW_BUCKET_AMP_CAP = 3
 # ~TARGET rows so small merges stay single-file.
 _MOR_ADD_TARGET_ROWS = 4_000_000
 _MOR_ADD_MAX_FILES = 256
+
+
+def _key_clustered(df: DataFrame, n_rows: int, key: str) -> DataFrame:
+    """``df`` (``n_rows`` rows) laid out for a write range-clustered by
+    ``key``, one file per ~_MOR_ADD_TARGET_ROWS rows. A one-file write
+    has no key range to split, so it coalesces instead of paying a
+    range sample and exchange. Both layouts cluster by ``key``, so a
+    ``distinct()`` on top plans no second exchange."""
+    nf = max(1, min(_MOR_ADD_MAX_FILES, -(-n_rows // _MOR_ADD_TARGET_ROWS)))
+    return df.coalesce(1) if nf == 1 else df.repartitionByRange(nf, key)
 
 
 class _NanKeySentinel:
@@ -982,10 +992,14 @@ class TxTable:
 
     # -- log primitives ----------------------------------------------------
 
-    def _versions(self) -> list[int]:
+    def _versions(self, names: list[str] | None = None) -> list[int]:
+        """Committed versions, ascending, from ``names`` (one log-dir
+        listing) or from a fresh listing."""
+        if names is None:
+            names = self.log_store.list_log(self.log_dir)
         return sorted(
             int(f[:-5])
-            for f in self.log_store.list_log(self.log_dir)
+            for f in names
             if f.endswith(".json")
             and not f.endswith(".checkpoint.json")
             and not f.startswith(".tmp-")
@@ -1208,11 +1222,17 @@ class TxTable:
         delete can reach aside — see
         :meth:`_TableState.from_checkpoint`). The replay also fills
         the handle's birth-column memos (:meth:`partition_by`)."""
+        # one log-dir listing serves the head, the checkpoint and the
+        # commits to fold
+        names = self.log_store.list_log(self.log_dir)
+        vs = self._versions(names)
         if version is None:
-            version = self.latest_version()
-        ck = self._latest_checkpoint_raw(version)
+            if not vs:
+                raise FileNotFoundError(f"no txlog at {self.path}")
+            version = vs[-1]
+        ck = self._latest_checkpoint_raw(version, names)
         state = _TableState.from_checkpoint(*ck) if ck else _TableState()
-        for v in self._versions():
+        for v in vs:
             if state.version < v <= version:
                 state = state.apply(v, self._read_action(v))
         if self._partition_cols is None and state.version >= 0:
@@ -1257,7 +1277,9 @@ class TxTable:
             )
         return s
 
-    def _latest_checkpoint_raw(self, version: int) -> tuple[int, dict] | None:
+    def _latest_checkpoint_raw(
+        self, version: int, names: list[str] | None = None
+    ) -> tuple[int, dict] | None:
         # Two checkpoint generations share the log dir: plain
         # ".checkpoint.json" (protocol-1 content, readable by every
         # engine revision) and ".checkpoint.v3" (consolidated DV /
@@ -1266,8 +1288,10 @@ class TxTable:
         # same-version tie the v3 record wins (it is derived from the
         # same immutable log prefix plus the pending-delete state the
         # plain record could not carry).
+        if names is None:
+            names = self.log_store.list_log(self.log_dir)
         cks: dict[int, str] = {}
-        for f in self.log_store.list_log(self.log_dir):
+        for f in names:
             if f.endswith(".checkpoint.json"):
                 v = int(f[: -len(".checkpoint.json")])
                 cks.setdefault(v, f)
@@ -1956,9 +1980,17 @@ class TxTable:
         stats = self._file_stats(adds)
         if validated_at is None:
             validated_at = self.latest_version()
-        v = self.latest_version() + 1
+        # claim the version right after the validated one without
+        # listing the log again; only a lost publish race lists it
+        # (below), and only a non-empty (validated_at, v) range can
+        # hold a raced add-constraint commit
+        v = validated_at + 1
         for attempt in range(max_commit_retries + 1):
-            news = self._constraints_added_in(validated_at, v)
+            news = (
+                self._constraints_added_in(validated_at, v)
+                if v > validated_at + 1
+                else []
+            )
             if news:
                 if revalidate is None:
                     raise ValueError(
@@ -2253,15 +2285,6 @@ class TxTable:
         )
         if mode not in ("cow", "mor"):
             raise ValueError(f"unknown merge mode {mode!r}")
-        # Materialize the caller's update relation ONCE (r14
-        # optimization round): the bounds probe, the distinct key set,
-        # the range-clustered write, and (CoW) the survivors' anti-join
-        # each re-ran the caller's arbitrary lineage — a filter over a
-        # joined scan re-executed up to four times per merge. The
-        # checkpoint is O(update rows), the merge's working set (what
-        # the adds write materializes anyway); eager=False defers it to
-        # the bounds probe, so an empty/no-op merge pays nothing extra.
-        updates = updates.localCheckpoint(eager=False)
         # CoW candidate reads open raw data files; pending equality
         # deletes would resurrect erased rows in the rewrite. Checked
         # at THE version this transaction binds to (and scans, and
@@ -2272,12 +2295,22 @@ class TxTable:
             else self._snapshot()
         )
         v = state.version
-        bounds = updates.agg(
+        # Materialize the caller's update relation ONCE, eagerly, and
+        # observe its key bounds and row counts in that same job: the
+        # constraint check, the touched-file probe, the clustered
+        # write and (CoW) the survivors' anti-join all read the
+        # checkpoint instead of re-running the caller's lineage, and
+        # no separate aggregate pass computes the bounds. The
+        # checkpoint is O(update rows), the merge's working set.
+        seen = Observation()
+        updates = updates.observe(
+            seen,
             F.min(key).alias("lo"),
             F.max(key).alias("hi"),
             F.count(F.lit(1)).alias("n"),
             F.count(key).alias("n_keyed"),
-        ).first()
+        ).localCheckpoint()
+        bounds = seen.get
         if bounds["n_keyed"] < bounds["n"]:
             # NULL merge keys can never match (semi/anti equi-joins
             # skip nulls), so such rows would silently re-insert on
@@ -2301,18 +2334,13 @@ class TxTable:
             # file a whole-key-space [min, max] — stats that prune
             # nothing and force the change feed's no-locality
             # fallback. One bounded shuffle of exactly the rows being
-            # written keeps MoR tables range-skippable. Null keys were
-            # refused above, so repartitionByRange sees none.
-            nf = max(1, min(
-                _MOR_ADD_MAX_FILES,
-                -(-int(bounds["n"]) // _MOR_ADD_TARGET_ROWS),
-            ))
-            adds = self._write_parts(
-                updates.repartitionByRange(nf, key)
-            )
+            # written (none for a one-file write) keeps MoR tables
+            # range-skippable. Null keys were refused above, so
+            # repartitionByRange sees none.
+            n = int(bounds["n"])
+            adds = self._write_parts(_key_clustered(updates, n, key))
             dels = self._write_parts(
-                updates.select(key).distinct()
-                .repartitionByRange(nf, key),
+                _key_clustered(updates.select(key), n, key).distinct(),
                 prefix="delete-",
             )
             # A MoR merge reads nothing and removes nothing — like an
@@ -2335,15 +2363,18 @@ class TxTable:
             # BOUNDED collect (≤4096 keys by the guard — the small-
             # upsert case where per-file bloom probes beat opening
             # range-overlapping files; larger update sets already
-            # amortize the probe scan they must pay anyway).
-            digs = [
-                _bloom_digest(r[0])
-                for r in updates.select(key).distinct().collect()
-            ]
+            # amortize the probe scan they must pay anyway); repeated
+            # keys dedupe here rather than in a distinct() exchange.
+            digs = list({
+                _bloom_digest(r[0]) for r in updates.select(key).collect()
+            })
         candidates = self._candidate_files(
             state, key, bounds["lo"], bounds["hi"], bloom_digests=digs
         )
-        keys = updates.select(key).distinct()
+        # a semi- or anti-join returns the same rows whether or not its
+        # build side repeats a key, so the raw keys broadcast as they
+        # are, with no distinct() exchange
+        keys = updates.select(key)
         touched = (
             [
                 os.path.basename(r["f"])
@@ -2360,19 +2391,13 @@ class TxTable:
             else []
         )
         # range-cluster the UPDATE half by the merge key (r14, same
-        # shuffle as the MoR write path): survivors inherit the
+        # layout as the MoR write path): survivors inherit the
         # touched files' layout (a file-scan union preserves
         # partition→file locality), but the raw updates arrive in the
         # caller's layout — usually hash-shuffled, whole-key-range
         # files whose logged stats would prune nothing for later
         # merges and change-feed buckets
-        upd = updates.repartitionByRange(
-            max(1, min(
-                _MOR_ADD_MAX_FILES,
-                -(-int(bounds["n"]) // _MOR_ADD_TARGET_ROWS),
-            )),
-            key,
-        )
+        upd = _key_clustered(updates, int(bounds["n"]), key)
         if touched:
             survivors = self._read_files(touched).join(
                 F.broadcast(keys), key, "left_anti"
@@ -2471,8 +2496,8 @@ class TxTable:
         for pred in _equalities(partition_filter):
             condition = condition & pred
         if mode == "dv":
-            v = self.latest_version()
-            s = self._snapshot(v)
+            s = self._snapshot()
+            v = s.version
             if s.deletes:
                 raise ValueError(
                     "delete_where(mode='dv') with pending merge-on-read "
@@ -2559,24 +2584,29 @@ class TxTable:
         if mode == "mor":
             if key is None:
                 raise ValueError("delete_where(mode='mor') requires key=")
-            v = self.latest_version()
-            s = self._snapshot(v)
+            s = self._snapshot()
+            v = s.version
             snapshot = self.read(_state=s)
             matched = self.read(
                 partition_filter=partition_filter, _state=s
             ).filter(condition)
-            # Materialize the matched-key aggregate ONCE (r14
-            # optimization round): the no-op probe, the NULL-key
-            # guard, the over-delete guard's broadcast, the
-            # delete-file write, and the file-count sizing each re-ran
-            # the full snapshot scan + predicate — five evaluations of
-            # the most expensive relation in the call. The checkpoint
-            # is O(matched distinct keys), exactly the delete-file
-            # payload being written anyway.
+            # Materialize the matched-key aggregate ONCE, eagerly, and
+            # observe its row counts in that same job: the over-delete
+            # guard's broadcast and the delete-file write read the
+            # checkpoint instead of re-running the full snapshot scan
+            # and predicate, and no further probe sizes or checks it.
+            # The checkpoint is O(matched distinct keys), exactly the
+            # delete-file payload being written anyway.
+            seen = Observation()
             mk = matched.groupBy(key).agg(
                 F.count(F.lit(1)).alias("__nm")
-            ).localCheckpoint(eager=False)
-            if mk.limit(1).count() == 0:
+            ).observe(
+                seen,
+                F.count(F.lit(1)).alias("n"),
+                F.count(key).alias("n_keyed"),
+            ).localCheckpoint()
+            counts = seen.get
+            if counts["n"] == 0:
                 return v  # no-op deletes don't burn a version
             # NULL-key guard, mirroring merge_upsert's: an equality
             # delete never matches a NULL key (the read-side anti-join
@@ -2584,7 +2614,7 @@ class TxTable:
             # drops the null group too), so a matched NULL-key row
             # would silently survive every read while the call reports
             # success (r8 advisor finding). Refuse loudly.
-            if mk.filter(F.col(key).isNull()).limit(1).count():
+            if counts["n_keyed"] < counts["n"]:
                 raise ValueError(
                     f"delete_where(mode='mor'): matched row(s) carry a "
                     f"NULL key '{key}' — equality deletes cannot erase "
@@ -2608,17 +2638,13 @@ class TxTable:
                 )
             # range-clustered like merge-mor's files (r14): selective
             # delete-file footer ranges keep the change feed's
-            # candidate pruning and vacuum's key scoping cheap
-            nf = max(1, min(
-                _MOR_ADD_MAX_FILES,
-                -(-mk.count() // _MOR_ADD_TARGET_ROWS),
-            ))
-            # the delete-file payload IS mk's key set — deriving it
-            # from the checkpointed aggregate instead of
+            # candidate pruning and vacuum's key scoping cheap. The
+            # delete-file payload IS mk's key set — deriving it from
+            # the checkpointed aggregate instead of
             # matched.select(key).distinct() skips one more full
             # snapshot scan (identical rows by construction)
             dels = self._write_parts(
-                mk.select(key).repartitionByRange(nf, key),
+                _key_clustered(mk.select(key), int(counts["n"]), key),
                 prefix="delete-",
             )
             dkeys = mk.select(key)
@@ -2650,10 +2676,10 @@ class TxTable:
                 probe=probe_mor, ignore_new_constraints=True,
                 what=f"delete_where(mode='mor', key={key!r})",
             )
-        v = self.latest_version()
-        entries = self._require_no_pending_deletes("delete_where", v).entries
+        s = self._require_no_pending_deletes("delete_where")
+        v = s.version
         entries = [
-            e for e in entries
+            e for e in s.entries
             if _stats_admit(e[1], partition_filter, None, None)
         ]
         live = [f for f, _, _ in entries]
@@ -2829,8 +2855,8 @@ class TxTable:
         vectors over the matched positions + new parts holding the
         transformed rows. The caller already made ``condition`` a
         Column conjoined with the partition_filter."""
-        v = self.latest_version()
-        s = self._snapshot(v)
+        s = self._snapshot()
+        v = s.version
         if s.deletes:
             raise ValueError(
                 "update_where(mode='dv') with pending merge-on-read "
@@ -2838,9 +2864,8 @@ class TxTable:
                 "to fold them first"
             )
         dv_map = s.dv
-        entries = s.entries
         entries = [
-            e for e in entries
+            e for e in s.entries
             if _stats_admit(e[1], partition_filter, None, None)
         ]
         live = [f for f, _, _ in entries]
@@ -3541,8 +3566,8 @@ class TxTable:
         data files."""
         if sort_cols and zorder:
             raise ValueError("sort_cols and zorder are mutually exclusive")
-        v = self.latest_version()
-        s = self._snapshot(v)
+        s = self._snapshot()
+        v = s.version
         live, dv_map = s.files, s.dv
         if not (full or sort_cols or zorder or s.deletes):
             # incremental bin-pack

@@ -65,11 +65,14 @@ def pytest_collection_modifyitems(config, items):
         if "slow" in item.keywords:
             item.add_marker(skip_slow)
             continue
-        if item.fspath.basename == "test_txlog.py" and item.name.endswith(
-            ("[cas]", "[memfs]")
+        callspec = getattr(item, "callspec", None)
+        if (
+            item.fspath.basename == "test_txlog.py"
+            and callspec is not None
+            and callspec.params.get("log_store_mode") in ("cas", "memfs")
+            and item.get_closest_marker("store_seam") is None
         ):
-            if item.get_closest_marker("store_seam") is None:
-                item.add_marker(skip_variant)
+            item.add_marker(skip_variant)
 
 SF_SMOKE = "/root/testdata/sf0.001"
 SF_ORACLE = "/root/testdata/sf0.01"

@@ -1040,18 +1040,22 @@ def test_append_auto_rebases_on_lost_race(spark, tmp_path):
     assert sorted(r.k for r in t.read().collect()) == [1, 2]
 
 
-def test_merge_upsert_rejects_null_keys(spark, tmp_path):
+@pytest.mark.parametrize("mode", ["cow", "mor"])
+def test_merge_upsert_rejects_null_keys(spark, tmp_path, mode):
     """NULL merge keys never match an equi-join, so such update rows
     would re-insert on EVERY merge and never be updatable; an all-null
-    set would silently read as empty. Both must refuse loudly."""
+    set would silently read as empty. Both must refuse loudly, in
+    either write mode."""
     p = str(tmp_path / "t")
     t = TxTable.create(spark, p, _df(spark, [(1, "a")]))
     mixed = spark.createDataFrame([(None, "x"), (1, "A")], "k long, v string")
-    with pytest.raises(ValueError, match="NULL merge key"):
-        t.merge_upsert(mixed, "k")
-    all_null = spark.createDataFrame([(None, "x")], "k long, v string")
-    with pytest.raises(ValueError, match="NULL merge key"):
-        t.merge_upsert(all_null, "k")
+    with pytest.raises(ValueError, match="1 update row"):
+        t.merge_upsert(mixed, "k", mode=mode)
+    all_null = spark.createDataFrame(
+        [(None, "x"), (None, "y")], "k long, v string"
+    )
+    with pytest.raises(ValueError, match="2 update row"):
+        t.merge_upsert(all_null, "k", mode=mode)
     # table unchanged, no version burned
     assert t.latest_version() == 0
     assert [r.v for r in t.read().collect()] == ["a"]
@@ -1169,11 +1173,37 @@ def test_merge_data_skipping_prunes_by_log_stats(spark, tmp_path):
     assert got == {1: "a", 2: "b", 100: "X", 101: "y"}
 
 
-def test_merge_empty_update_set_is_noop(spark, tmp_path):
+@pytest.mark.parametrize("mode", ["cow", "mor"])
+def test_merge_empty_update_set_is_noop(spark, tmp_path, mode):
     p = str(tmp_path / "t")
     t = TxTable.create(spark, p, _df(spark, [(1, "a")]))
-    v = t.merge_upsert(_df(spark, []).limit(0), "k")
+    v = t.merge_upsert(_df(spark, []).limit(0), "k", mode=mode)
     assert v == 0 and t.latest_version() == 0
+    # an update set the caller's filter empties is a no-op too
+    v = t.merge_upsert(_df(spark, [(1, "A")]).filter("k > 1"), "k", mode=mode)
+    assert v == 0 and t.latest_version() == 0
+    assert [(r.k, r.v) for r in t.read().collect()] == [(1, "a")]
+
+
+@pytest.mark.parametrize("mode", ["cow", "mor"])
+def test_merge_update_set_with_repeated_keys(spark, tmp_path, mode):
+    """The touched-file probe and the survivors' anti-join broadcast the
+    update keys as they are: a key the update set repeats replaces its
+    old row once, and both update rows land, as in a model that
+    applies the merge to the key's old rows."""
+    p = str(tmp_path / "t")
+    t = TxTable.create(
+        spark, p, _df(spark, [(1, "a"), (2, "b"), (3, "c")]).coalesce(1)
+    )
+    t.append(_df(spark, [(7, "g"), (8, "h")]).coalesce(1))
+    upd = [(2, "B1"), (2, "B2"), (8, "H"), (8, "H"), (5, "e")]
+    v = t.merge_upsert(_df(spark, upd), "k", mode=mode)
+    assert v == 2
+    model = [(1, "a"), (3, "c"), (7, "g"), *upd]
+    assert sorted((r.k, r.v) for r in t.read().collect()) == sorted(model)
+    # both files hold an update key: each is rewritten once
+    if mode == "cow":
+        assert len(t._read_action(v)["removes"]) == 2
 
 
 def test_stats_survive_for_string_keys(spark, tmp_path):
@@ -1985,7 +2015,9 @@ def test_txlog_random_ops_match_model(spark, tmp_path, log_store_mode):
 
     rng = random.Random(9_2026)
     meta_rng = random.Random(2026_9)
+    restore_rng = random.Random(26_29)
     for seq in range(3):
+        restores = 0
         p = str(tmp_path / f"t{seq}")
         model_hist = []  # model snapshot per version
         dirty_hist = []  # pending-MoR-deletes flag per version
@@ -2003,7 +2035,9 @@ def test_txlog_random_ops_match_model(spark, tmp_path, log_store_mode):
         dirty_hist.append(False)
         dv_hist.append(False)
         meta_hist.append(({}, {}))
-        for _ in range(10):
+        # ten drawn ops, then a closing restore: not every draw
+        # sequence holds one
+        for step in range(11):
             meta = meta_rng.choice([None, None, "add", "drop", "txn"])
             if meta == "add" and len(checks) < len(_MODEL_CHECKS):
                 name = meta_rng.choice(sorted(set(_MODEL_CHECKS) - set(checks)))
@@ -2037,7 +2071,7 @@ def test_txlog_random_ops_match_model(spark, tmp_path, log_store_mode):
                 dirty_hist.append(dirty)
                 dv_hist.append(dv_dirty)
                 meta_hist.append((dict(checks), dict(txns)))
-            op = rng.choice(
+            op = "restore" if step == 10 else rng.choice(
                 ["append", "merge", "merge_mor", "delete", "delete_dv",
                  "update_dv", "optimize", "checkpoint", "restore"]
             )
@@ -2134,17 +2168,40 @@ def test_txlog_random_ops_match_model(spark, tmp_path, log_store_mode):
                 t.checkpoint()
                 continue  # checkpoint burns no version
             else:
-                target = rng.randrange(len(model_hist))
-                if dirty or dirty_hist[target] or dv_dirty or dv_hist[target]:
+                # targets come from their own generator, so the op
+                # draws above stay as they were; a restore over pending
+                # deletes refuses (at the head or the target), so a
+                # dirty head is optimized first and only clean
+                # versions are drawn as targets
+                if dirty or dv_dirty:
                     with _pytest.raises(ValueError, match="optimize"):
-                        t.restore(target)
-                    continue
+                        t.restore(len(model_hist) - 1)
+                    v_opt = t.optimize(sort_cols=["k"])
+                    assert v_opt == len(model_hist)
+                    dirty = dv_dirty = False
+                    model_hist.append(dict(model))
+                    dirty_hist.append(False)
+                    dv_hist.append(False)
+                    meta_hist.append((dict(checks), dict(txns)))
+                unclean = [
+                    v for v in range(len(model_hist))
+                    if dirty_hist[v] or dv_hist[v]
+                ]
+                if unclean:
+                    with _pytest.raises(ValueError, match="optimize"):
+                        t.restore(restore_rng.choice(unclean))
+                target = restore_rng.choice([
+                    v for v in range(len(model_hist))
+                    if not (dirty_hist[v] or dv_hist[v])
+                ])
                 t.restore(target)
                 model = dict(model_hist[target])
+                restores += 1
             model_hist.append(dict(model))
             dirty_hist.append(dirty)
             dv_hist.append(dv_dirty)
             meta_hist.append((dict(checks), dict(txns)))
+        assert restores, f"seq {seq} landed no restore"
         genesis = _TableState()
         for v, want in enumerate(model_hist):
             got = {r["k"]: r["v"] for r in t.read(v).collect()}
@@ -3664,8 +3721,9 @@ def test_format_reader_resolves_one_snapshot_version(spark, tmp_path):
     The old code called latest_version() twice; a concurrent optimize
     landing between the two calls folded the vectors, so the already-
     selected pre-fold files were planned WITHOUT their vectors and
-    logically-deleted rows resurrected. Injection: the SECOND
-    latest_version() call during planning (if any — the fix makes one)
+    logically-deleted rows resurrected. Injection: the SECOND head
+    resolution during planning — a latest_version() call or a
+    _snapshot() of the latest version, if any; the fix makes one —
     runs that optimize."""
     import data_analyse_marche_emploi_spark.sources.txlog as TX
 
@@ -3678,11 +3736,12 @@ def test_format_reader_resolves_one_snapshot_version(spark, tmp_path):
     schema = t.read().schema
     expect = sorted(r.k for r in t.read().collect())
 
-    orig = TX.TxTable.latest_version
+    orig_latest = TX.TxTable.latest_version
+    orig_snapshot = TX.TxTable._snapshot
     state = {"armed": False, "calls": 0, "racing": False}
 
-    def hooked(self):
-        if state["armed"] and not state["racing"] and self.path == p:
+    def resolving_head(t):
+        if state["armed"] and not state["racing"] and t.path == p:
             state["calls"] += 1
             if state["calls"] == 2:
                 state["racing"] = True
@@ -3690,16 +3749,27 @@ def test_format_reader_resolves_one_snapshot_version(spark, tmp_path):
                     TxTable(spark, p).optimize()  # folds the vectors
                 finally:
                     state["racing"] = False
-        return orig(self)
 
-    TX.TxTable.latest_version = hooked
+    def hooked_latest(self):
+        resolving_head(self)
+        return orig_latest(self)
+
+    def hooked_snapshot(self, version=None):
+        if version is None:
+            resolving_head(self)
+        return orig_snapshot(self, version)
+
+    TX.TxTable.latest_version = hooked_latest
+    TX.TxTable._snapshot = hooked_snapshot
     try:
         rdr = TX.TxLogBatchReader(schema, {"path": p})
         state["armed"] = True
         parts = rdr.partitions()
         state["armed"] = False
     finally:
-        TX.TxTable.latest_version = orig
+        TX.TxTable.latest_version = orig_latest
+        TX.TxTable._snapshot = orig_snapshot
+    assert state["calls"] == 1
     got = sorted(
         k
         for part in parts

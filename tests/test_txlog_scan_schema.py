@@ -225,10 +225,10 @@ KEY = "o_orderkey"
 # vectors and equality deletes when it is read
 JOB_BUDGET = {
     "append": 1,
-    "merge_cow": 10,
+    "merge_cow": 6,
     "delete_dv": 2,
     "update_dv": 5,
-    "merge_mor": 7,
+    "merge_mor": 3,
     "read": 0,
     "optimize": 4,
 }
@@ -277,27 +277,65 @@ def test_txlog_op_job_budget(spark, tmp_path):
     assert jobs == JOB_BUDGET
 
 
+def test_delete_mor_job_budget(spark, tmp_path):
+    """An equality delete materialises its matched keys once, with
+    their counts observed in the same pass (2 jobs: the aggregate's
+    exchange and the checkpoint), then runs the over-delete guard (4)
+    and the one-file delete-key write (1). A budget may go down,
+    never up."""
+    t = TxTable.create(spark, str(tmp_path / "t"), spark.range(20).select(
+        F.col("id").alias("k"), (F.col("id") * 10).alias("v")
+    ).coalesce(1))
+    jobs = jobs_in_group(
+        spark, lambda: t.delete_where("k % 3 = 0", mode="mor", key="k")
+    )
+    assert jobs == 7
+    assert sorted(r.k for r in t.read().collect()) == [
+        k for k in range(20) if k % 3
+    ]
+
+
 # checkpoint records read per op, on a checkpointed table: each op
 # replays the log once. A budget may go down, never up.
 REPLAY_BUDGET = {op: 1 for op in (*JOB_BUDGET, "checkpoint", "vacuum")}
+# log-dir listings per op on the same table (each a LIST request on an
+# object store). A budget may go down, never up.
+LIST_BUDGET = {
+    "append": 2,
+    "merge_cow": 2,
+    "delete_dv": 2,
+    "update_dv": 2,
+    "merge_mor": 2,
+    "read": 1,
+    "optimize": 2,
+    "checkpoint": 1,
+    "vacuum": 3,
+}
 
 
 class _CheckpointReads(PosixLogStore):
-    """Counts the checkpoint records the engine reads."""
+    """Counts the checkpoint records the engine reads and its log-dir
+    listings."""
 
     def __init__(self):
         self.reads = 0
+        self.lists = 0
 
     def read_json(self, path: str) -> dict:
         self.reads += ".checkpoint." in os.path.basename(path)
         return super().read_json(path)
+
+    def list_log(self, log_dir: str) -> list[str]:
+        self.lists += 1
+        return super().list_log(log_dir)
 
 
 def test_txlog_op_replay_budget(spark, tmp_path):
     """The same cycle plus checkpoint and vacuum, on a table that was
     checkpointed first, through a fresh handle: every op reads the
     checkpoint record once, so its constraints, txns, schema and
-    partition columns come from the one replay its snapshot runs."""
+    partition columns come from the one replay its snapshot runs, and
+    lists the log dir no more often than its budget."""
     orders = _orders(spark)
     p = str(tmp_path / "t")
     TxTable.create(spark, p, _keys(orders, 0, 1000)).checkpoint()
@@ -308,12 +346,14 @@ def test_txlog_op_replay_budget(spark, tmp_path):
         "checkpoint": t.checkpoint,
         "vacuum": lambda: t.vacuum(keep_versions=2),
     }
-    reads = {}
+    reads, lists = {}, {}
     for name, op in ops.items():
-        before = store.reads
+        before = store.reads, store.lists
         op()
-        reads[name] = store.reads - before
+        reads[name] = store.reads - before[0]
+        lists[name] = store.lists - before[1]
     assert reads == REPLAY_BUDGET
+    assert lists == LIST_BUDGET
 
 
 def _parquet_relations(df) -> int:
