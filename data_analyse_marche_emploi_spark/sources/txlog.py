@@ -247,6 +247,52 @@ def _key_clustered(df: DataFrame, n_rows: int, key: str) -> DataFrame:
     return df.coalesce(1) if nf == 1 else df.repartitionByRange(nf, key)
 
 
+def _dml_predicate(condition, partition_filter: dict | None):
+    """A row-level DML ``condition`` (SQL string or Column) as a Column,
+    conjoined with ``partition_filter``'s equalities."""
+    if isinstance(condition, str):
+        condition = F.expr(condition)
+    for pred in _equalities(partition_filter):
+        condition = condition & pred
+    return condition
+
+
+def _touched_files(scan: DataFrame, keep) -> list[str]:
+    """Base names of the files of ``scan`` holding a row that ``keep``
+    (a filter or semi-join, DataFrame -> DataFrame) retains: one
+    distinct collect of ``input_file_name``, taken on the scan itself."""
+    rows = keep(scan.withColumn("f", F.input_file_name()))
+    return [
+        os.path.basename(r["f"])
+        for r in rows.select("f").distinct().collect()
+    ]
+
+
+def _check_set_columns(set_exprs: dict[str, str], columns: list[str]):
+    unknown = [c for c in set_exprs if c not in columns]
+    if unknown:
+        raise ValueError(
+            f"update_where: SET column(s) {unknown} not in table "
+            f"schema {columns}"
+        )
+
+
+def _set_projection(columns: list[str], set_exprs: dict[str, str],
+                    hit=None) -> list:
+    """UPDATE's SET as one projection over ``columns``: every
+    expression sees the pre-update row. With ``hit`` (a boolean Column)
+    only hit rows take the new values; without it every row does."""
+    return [
+        (
+            F.expr(set_exprs[c]) if hit is None
+            else F.when(hit, F.expr(set_exprs[c])).otherwise(F.col(c))
+        ).alias(c)
+        if c in set_exprs
+        else F.col(c)
+        for c in columns
+    ]
+
+
 class _NanKeySentinel:
     """Singleton stand-in for float NaN change-feed keys: dict lookups
     on raw NaN never match (NaN != NaN), but the batch feed's xxhash64
@@ -1082,16 +1128,10 @@ class TxTable:
                 {
                     "version": version,
                     # the MINIMUM revision able to read this action:
-                    # DV writers pass min_protocol explicitly (2 for a
-                    # first vector, 3 when stacking — see the module
-                    # protocol comment); everything else stamps 1
-                    "protocol": (
-                        min_protocol
-                        if min_protocol is not None
-                        else _DV_PROTOCOL
-                        if op in ("delete-dv", "update-dv")
-                        else _PROTOCOL
-                    ),
+                    # DV writers pass min_protocol (2 for a first
+                    # vector, 3 when stacking — see the module protocol
+                    # comment); everything else stamps 1
+                    "protocol": min_protocol or _PROTOCOL,
                     "adds": adds,
                     "removes": removes,
                     "op": op,
@@ -1211,7 +1251,8 @@ class TxTable:
         row = self.read(_state=s).agg(F.min(col), F.max(col)).first()
         return (row[0], row[1])
 
-    def _snapshot(self, version: int | None = None) -> _TableState:
+    def _snapshot(self, version: int | None = None,
+                  names: list[str] | None = None) -> _TableState:
         """The log state at ``version`` (default latest): seeded from
         the newest checkpoint at or below it, plain or
         ``.checkpoint.v3`` (if any), then folded forward commit by
@@ -1221,10 +1262,12 @@ class TxTable:
         fold equals the genesis fold (``added_at`` of files no live
         delete can reach aside — see
         :meth:`_TableState.from_checkpoint`). The replay also fills
-        the handle's birth-column memos (:meth:`partition_by`)."""
+        the handle's birth-column memos (:meth:`partition_by`).
+        ``names`` is a log-dir listing the caller already holds."""
         # one log-dir listing serves the head, the checkpoint and the
         # commits to fold
-        names = self.log_store.list_log(self.log_dir)
+        if names is None:
+            names = self.log_store.list_log(self.log_dir)
         vs = self._versions(names)
         if version is None:
             if not vs:
@@ -2376,17 +2419,10 @@ class TxTable:
         # are, with no distinct() exchange
         keys = updates.select(key)
         touched = (
-            [
-                os.path.basename(r["f"])
-                for r in (
-                    self._read_files(candidates)
-                    .withColumn("f", F.input_file_name())
-                    .join(F.broadcast(keys), key, "left_semi")
-                    .select("f")
-                    .distinct()
-                    .collect()
-                )
-            ]
+            _touched_files(
+                self._read_files(candidates),
+                lambda d: d.join(F.broadcast(keys), key, "left_semi"),
+            )
             if candidates
             else []
         )
@@ -2489,98 +2525,11 @@ class TxTable:
         checked, not assumed absent."""
         if mode not in ("cow", "mor", "dv"):
             raise ValueError(f"unknown delete mode {mode!r}")
-        if isinstance(condition, str):
-            # SQL-string predicates are first-class (update_where and
-            # the CoW survivor rewrite's ~condition need a Column)
-            condition = F.expr(condition)
-        for pred in _equalities(partition_filter):
-            condition = condition & pred
+        condition = _dml_predicate(condition, partition_filter)
         if mode == "dv":
-            s = self._snapshot()
-            v = s.version
-            if s.deletes:
-                raise ValueError(
-                    "delete_where(mode='dv') with pending merge-on-read "
-                    "equality deletes is not supported — run optimize() "
-                    "to fold them first"
-                )
-            dv_map = s.dv
-            entries = s.entries
-            entries = [
-                e for e in entries
-                if _stats_admit(e[1], partition_filter, None, None)
-            ]
-            live = [f for f, _, _ in entries]
-            if not live:
-                return v
-            # matched physical positions; SQL DELETE semantics (only
-            # definite-TRUE rows). Rows an earlier vector already
-            # erased are logically gone and must NOT re-enter a new
-            # part (anti-join below): incremental parts ARE the CDF
-            # delta, so a re-marked position would re-emit as deleted.
-            # persist: the matched-position set (O(newly deleted rows)
-            # — the selective-delete contract) feeds the no-op probe,
-            # the fraction guard, AND the vector write; without it
-            # each would re-scan every live file's predicate
-            matched = (
-                self._positioned(
-                    self._read_files(live), self._dv_rows(dv_map, live)
-                )
-                .filter(F.coalesce(condition, F.lit(False)))
-                .select(
-                    F.col("__dv_file").alias("file"),
-                    F.col("__dv_pos").alias("pos"),
-                )
+            return self._dv_where(
+                condition, None, partition_filter, max_matched_fraction
             )
-            # ONE action (r14 optimization round): the vector write
-            # itself materializes the matched set, and its parquet
-            # footers carry the exact row count the no-op probe and
-            # the fraction guard need — the previous persist + count()
-            # was a second action over the same scan. A guard REFUSAL
-            # now deletes the just-written (uncommitted, unreferenced)
-            # parts to keep the "no commit was made" promise; that
-            # wasted write is O(matched rows) on an error path whose
-            # fix is a CoW rerun costing a full rewrite anyway.
-            mapping = self._write_dv_parts(matched)
-            try:
-                n_matched = self._parts_rows(mapping.values())
-                if n_matched == 0:
-                    return v  # no-op deletes don't burn a version
-                self._guard_dv_fraction(
-                    n_matched, entries, "delete_where(mode='dv')",
-                    max_matched_fraction,
-                )
-                # stacking on an already-vectored file needs the
-                # stack-aware replay — stamp the higher protocol
-                # revision
-                stacked = any(f in dv_map for f in mapping)
-                try:
-                    self._commit(
-                        v + 1, [], [], "delete-dv",
-                        extra={"dv": mapping},
-                        min_protocol=(
-                            _DV_STACK_PROTOCOL if stacked
-                            else _DV_PROTOCOL
-                        ),
-                    )
-                except FileExistsError:
-                    # The DV conflict matrix (positions are only valid
-                    # against the exact file set the scan saw) is
-                    # stricter than append's; fail loudly rather than
-                    # rebase.
-                    raise ValueError(
-                        "delete_where(mode='dv') lost the commit race "
-                        "to a concurrent commit; re-run the delete"
-                    ) from None
-            except Exception:
-                # ANY post-write failure (guard refusal, lost commit
-                # race) deletes the uncommitted, unreferenced vector
-                # parts — "no commit was made" leaves no orphans
-                # (r14 advisor; was ValueError-only around the guard).
-                for part in mapping.values():
-                    self.file_store.delete(self.path, part)
-                raise
-            return v + 1
         if mode == "mor":
             if key is None:
                 raise ValueError("delete_where(mode='mor') requires key=")
@@ -2604,6 +2553,7 @@ class TxTable:
                 seen,
                 F.count(F.lit(1)).alias("n"),
                 F.count(key).alias("n_keyed"),
+                F.sum("__nm").alias("rows"),
             ).localCheckpoint()
             counts = seen.get
             if counts["n"] == 0:
@@ -2620,16 +2570,15 @@ class TxTable:
                     f"NULL key '{key}' — equality deletes cannot erase "
                     "them; use mode='cow' (or fill the key first)"
                 )
-            # Over-delete guard: every matched key's TOTAL row count in
-            # the snapshot must equal its matched count — a key with an
-            # unmatched sibling row would lose that sibling to the
-            # equality delete.
-            tot = (
-                snapshot.join(F.broadcast(mk), key)
-                .groupBy(key, "__nm")
-                .agg(F.count(F.lit(1)).alias("__nt"))
-            )
-            if tot.filter(F.col("__nt") > F.col("__nm")).limit(1).count():
+            # Over-delete guard: a key with an unmatched sibling row
+            # would lose that sibling to the equality delete. Matched
+            # rows are a subset of the snapshot and none has a NULL key
+            # (refused above), so the snapshot rows sharing a matched
+            # key outnumber the matched rows exactly when such a
+            # sibling exists: one count decides it.
+            if snapshot.join(
+                F.broadcast(mk.select(key)), key, "left_semi"
+            ).count() > counts["rows"]:
                 raise ValueError(
                     f"delete_where(mode='mor'): a matched key in "
                     f"'{key}' also has rows NOT matching the predicate "
@@ -2676,50 +2625,7 @@ class TxTable:
                 probe=probe_mor, ignore_new_constraints=True,
                 what=f"delete_where(mode='mor', key={key!r})",
             )
-        s = self._require_no_pending_deletes("delete_where")
-        v = s.version
-        entries = [
-            e for e in s.entries
-            if _stats_admit(e[1], partition_filter, None, None)
-        ]
-        live = [f for f, _, _ in entries]
-        cur = self._read_files(live)
-        touched = [
-            os.path.basename(r["f"])
-            for r in (
-                cur.withColumn("f", F.input_file_name())
-                .filter(condition)
-                .select("f")
-                .distinct()
-                .collect()
-            )
-        ]
-        if not touched:
-            return v  # no-op deletes don't burn a version
-        # SQL DELETE semantics: only definite-TRUE rows go; a NULL
-        # predicate keeps its row (plain ~condition would drop it —
-        # update_where's when/otherwise already gets this right)
-        survivors = self._read_files(touched).filter(
-            ~F.coalesce(condition, F.lit(False))
-        )
-        adds = self._write_parts(survivors)
-
-        def probe_cow(entries: list[tuple[str, dict]]) -> bool:
-            # A concurrently added row matching the predicate would
-            # survive a rebase that serial execution would delete.
-            names = [f for f, _ in entries]
-            if not names:
-                return False
-            return bool(
-                self._read_files(names).filter(condition).limit(1).count()
-            )
-
-        return self._commit_rebase(
-            v, adds, touched, "delete",
-            stats=self._file_stats(adds),
-            probe=probe_cow, ignore_new_constraints=True,
-            what="delete_where(mode='cow')",
-        )
+        return self._rewrite_where(condition, None, partition_filter)
 
     def update_where(self, condition, set_exprs: dict[str, str],
                      partition_filter: dict | None = None,
@@ -2775,63 +2681,52 @@ class TxTable:
                 f"update_where: SET touches partition_filter column(s) "
                 f"{bad} — the filter would contradict the assignment"
             )
-        if isinstance(condition, str):
-            condition = F.expr(condition)
-        for pred in _equalities(partition_filter):
-            condition = condition & pred
+        condition = _dml_predicate(condition, partition_filter)
         if mode == "dv":
-            return self._update_where_dv(
-                condition, set_exprs, partition_filter,
-                max_matched_fraction,
+            return self._dv_where(
+                condition, set_exprs, partition_filter, max_matched_fraction
             )
-        state = self._require_no_pending_deletes("update_where")
-        v = state.version
-        entries = [
-            e for e in state.entries
-            if _stats_admit(e[1], partition_filter, None, None)
-        ]
-        live = [f for f, _, _ in entries]
-        cur = self._read_files(live)
-        unknown = [c for c in set_exprs if c not in cur.columns]
-        if unknown:
-            raise ValueError(
-                f"update_where: SET column(s) {unknown} not in table "
-                f"schema {cur.columns}"
-            )
-        touched = [
-            os.path.basename(r["f"])
-            for r in (
-                cur.withColumn("f", F.input_file_name())
-                .filter(condition)
-                .select("f")
-                .distinct()
-                .collect()
-            )
-        ]
-        if not touched:
-            return v  # no-op updates don't burn a version
-        marked = self._read_files(touched).withColumn("__upd", condition)
-        rewritten = marked.select(
-            *[
-                F.when(F.col("__upd"), F.expr(set_exprs[c]))
-                .otherwise(F.col(c))
-                .alias(c)
-                if c in set_exprs
-                else F.col(c)
-                for c in marked.columns
-                if c != "__upd"
-            ],
-            "__upd",
-        )
-        self._enforce_constraints(
-            rewritten.filter("__upd").drop("__upd"), "update_where",
-            state.constraints,
-        )
-        adds = self._write_parts(rewritten.drop("__upd"))
+        return self._rewrite_where(condition, set_exprs, partition_filter)
 
-        def probe_update(entries: list[tuple[str, dict]]) -> bool:
+    def _rewrite_where(self, condition, set_exprs: dict[str, str] | None,
+                       partition_filter: dict | None) -> int:
+        """The copy-on-write body of :meth:`delete_where`
+        (``set_exprs=None``) and :meth:`update_where`: one predicate
+        scan finds the files holding matching rows, and only those are
+        rewritten, without their matched rows (delete) or with them
+        transformed (update). ``condition`` is already a Column
+        conjoined with the partition_filter."""
+        what = "delete_where" if set_exprs is None else "update_where"
+        s = self._require_no_pending_deletes(what)
+        cur = self._read_files([
+            f for f, st, _ in s.entries
+            if _stats_admit(st, partition_filter, None, None)
+        ])
+        if set_exprs is not None:
+            _check_set_columns(set_exprs, cur.columns)
+        touched = _touched_files(cur, lambda d: d.filter(condition))
+        if not touched:
+            return s.version  # no-op DML doesn't burn a version
+        # SQL semantics: only definite-TRUE rows are deleted or
+        # updated; a NULL predicate keeps its row as it is
+        hit = F.coalesce(condition, F.lit(False))
+        rows = self._read_files(touched)
+        updates = None
+        if set_exprs is None:
+            adds = self._write_parts(rows.filter(~hit))
+        else:
+            rewritten = rows.withColumn("__upd", hit).select(
+                *_set_projection(rows.columns, set_exprs, F.col("__upd")),
+                "__upd",
+            )
+            updates = rewritten.filter("__upd").drop("__upd")
+            self._enforce_constraints(updates, what, s.constraints)
+            adds = self._write_parts(rewritten.drop("__upd"))
+
+        def probe(entries: list[tuple[str, dict]]) -> bool:
             # A concurrently added row matching the predicate would
-            # escape an update serial execution would have applied.
+            # escape a delete or update serial execution would have
+            # applied to it.
             names = [f for f, _ in entries]
             if not names:
                 return False
@@ -2839,122 +2734,119 @@ class TxTable:
                 self._read_files(names).filter(condition).limit(1).count()
             )
 
+        # a delete writes no new rows, so a raced add-constraint has
+        # nothing to re-validate; an update re-validates its updates
         return self._commit_rebase(
-            v, adds, touched, "update",
-            stats=self._file_stats(adds),
-            probe=probe_update,
-            updates=rewritten.filter("__upd").drop("__upd"),
-            what="update_where",
+            s.version, adds, touched,
+            "delete" if set_exprs is None else "update",
+            stats=self._file_stats(adds), probe=probe, updates=updates,
+            ignore_new_constraints=set_exprs is None,
+            what="delete_where(mode='cow')" if set_exprs is None else what,
         )
 
-    def _update_where_dv(self, condition, set_exprs: dict[str, str],
-                         partition_filter: dict | None,
-                         max_matched_fraction: float = 0.5) -> int:
-        """The merge-on-read UPDATE body (see :meth:`update_where`
-        ``mode="dv"``): one commit = per-file incremental deletion
-        vectors over the matched positions + new parts holding the
-        transformed rows. The caller already made ``condition`` a
-        Column conjoined with the partition_filter."""
+    def _dv_where(self, condition, set_exprs: dict[str, str] | None,
+                  partition_filter: dict | None,
+                  max_matched_fraction: float) -> int:
+        """The deletion-vector body of :meth:`delete_where`
+        (``set_exprs=None``) and :meth:`update_where`: one commit holds
+        per-file incremental vectors over the matched positions and,
+        for an update, new parts with the transformed rows.
+        ``condition`` is already a Column conjoined with the
+        partition_filter."""
+        verb = "delete" if set_exprs is None else "update"
+        what = f"{verb}_where(mode='dv')"
         s = self._snapshot()
-        v = s.version
         if s.deletes:
             raise ValueError(
-                "update_where(mode='dv') with pending merge-on-read "
-                "equality deletes is not supported — run optimize() "
-                "to fold them first"
+                f"{what} with pending merge-on-read equality deletes is "
+                "not supported — run optimize() to fold them first"
             )
-        dv_map = s.dv
         entries = [
             e for e in s.entries
             if _stats_admit(e[1], partition_filter, None, None)
         ]
         live = [f for f, _, _ in entries]
         if not live:
-            return v
+            return s.version
         cur = self._read_files(live)
-        unknown = [c for c in set_exprs if c not in cur.columns]
-        if unknown:
-            raise ValueError(
-                f"update_where: SET column(s) {unknown} not in table "
-                f"schema {cur.columns}"
-            )
-        cols = cur.columns
-        # rows an earlier vector erased are logically gone — they must
-        # neither re-match nor resurrect transformed
-        scan = self._positioned(cur, self._dv_rows(dv_map, live))
-        # persist: the matched rows (O(matched) — the MoR-update
-        # contract) feed both the vector write and the transformed-row
-        # write; without it each re-scans every live file. The no-op
-        # probe and the fraction guard read the written vector parts'
-        # parquet footers instead of running a separate count() action
-        # (r14 optimization round — one action fewer per commit); a
-        # guard/constraint refusal deletes the just-written
-        # (uncommitted, unreferenced) parts to keep the "no commit was
-        # made" promise.
-        matched = scan.filter(F.coalesce(condition, F.lit(False))).persist()
+        if set_exprs is not None:
+            _check_set_columns(set_exprs, cur.columns)
+        # matched physical positions; SQL semantics (only definite-TRUE
+        # rows). Rows an earlier vector already erased are logically
+        # gone: they must neither re-match nor resurrect transformed,
+        # and incremental parts ARE the CDF delta, so a re-marked
+        # position would re-emit as deleted.
+        matched = self._positioned(cur, self._dv_rows(s.dv, live)).filter(
+            F.coalesce(condition, F.lit(False))
+        )
+        if set_exprs is not None:
+            # the update reads its matched rows (O(matched), the
+            # selective-DML contract) twice: for the vector write and
+            # the transformed-row write; without persist each re-scans
+            # every live file
+            matched = matched.persist()
+        mapping: dict[str, str] = {}
         adds: list[str] = []
         try:
-            # one incremental part per touched file, in parallel —
-            # the scan's anti-join above already excluded positions an
-            # earlier vector erased, so these parts hold only NEWLY
-            # deleted positions (the CDF delta by construction)
+            # ONE action for a delete (r14 optimization round): the
+            # vector write materializes the matched set, and its parquet
+            # footers carry the exact row count the no-op probe and the
+            # fraction guard need. A refusal below deletes the
+            # just-written parts to keep the "no commit was made"
+            # promise; that wasted write is O(matched rows) on an error
+            # path whose fix is a CoW rerun costing a full rewrite.
             mapping = self._write_dv_parts(
                 matched.select(
                     F.col("__dv_file").alias("file"),
                     F.col("__dv_pos").alias("pos"),
                 )
             )
-            try:
-                n_matched = self._parts_rows(mapping.values())
-                if n_matched == 0:
-                    return v  # no-op updates don't burn a version
-                self._guard_dv_fraction(
-                    n_matched, entries, "update_where(mode='dv')",
-                    max_matched_fraction,
-                )
-                # pre-update SET semantics: every expression sees the
-                # old row
+            n_matched = self._parts_rows(mapping.values())
+            if n_matched == 0:
+                return s.version  # no-op DML doesn't burn a version
+            self._guard_dv_fraction(
+                n_matched, entries, what, max_matched_fraction
+            )
+            if set_exprs is not None:
                 updated = matched.select(
-                    *[
-                        F.expr(set_exprs[c]).alias(c) if c in set_exprs
-                        else F.col(c)
-                        for c in cols
-                    ]
+                    *_set_projection(cur.columns, set_exprs)
                 )
-                self._enforce_constraints(
-                    updated, "update_where(mode='dv')", s.constraints
-                )
+                self._enforce_constraints(updated, what, s.constraints)
                 adds = self._write_parts(updated)
-                stacked = any(f in dv_map for f in mapping)
-                try:
-                    self._commit(
-                        v + 1, adds, [], "update-dv",
-                        stats=self._file_stats(adds),
-                        extra={"dv": mapping},
-                        min_protocol=(
-                            _DV_STACK_PROTOCOL if stacked
-                            else _DV_PROTOCOL
-                        ),
-                    )
-                except FileExistsError:
-                    raise ValueError(
-                        "update_where(mode='dv') lost the commit race "
-                        "to a concurrent commit; re-run the update"
-                    ) from None
-            except Exception:
-                # ANY failure after the DV write and before a landed
-                # commit — guard/constraint refusals, a Spark error in
-                # the adds write, a lost commit race — deletes every
-                # just-written (uncommitted, unreferenced) part, so
-                # "no commit was made" never leaves orphans behind
-                # (r14 advisor: the old cleanup caught ValueError only
-                # and left the adds write outside its scope).
-                for part in list(mapping.values()) + adds:
-                    self.file_store.delete(self.path, part)
-                raise
+            # stacking on an already-vectored file needs the
+            # stack-aware replay — stamp the higher protocol revision
+            stacked = any(f in s.dv for f in mapping)
+            try:
+                self._commit(
+                    s.version + 1, adds, [], f"{verb}-dv",
+                    stats=self._file_stats(adds),
+                    extra={"dv": mapping},
+                    min_protocol=(
+                        _DV_STACK_PROTOCOL if stacked else _DV_PROTOCOL
+                    ),
+                )
+            except FileExistsError:
+                # The DV conflict matrix (positions are only valid
+                # against the exact file set the scan saw) is stricter
+                # than append's; fail loudly rather than rebase.
+                raise ValueError(
+                    f"{what} lost the commit race to a concurrent "
+                    f"commit; re-run the {verb}"
+                ) from None
+        except Exception:
+            # ANY failure after the vector write and before a landed
+            # commit — guard/constraint refusals, a Spark error in the
+            # adds write, a lost commit race — deletes every
+            # just-written (uncommitted, unreferenced) part, so "no
+            # commit was made" never leaves orphans behind (r14
+            # advisor).
+            for part in [*mapping.values(), *adds]:
+                self.file_store.delete(self.path, part)
+            raise
         finally:
-            matched.unpersist()
-        return v + 1
+            if set_exprs is not None:
+                matched.unpersist()
+        return s.version + 1
 
     # -- read path -----------------------------------------------------------
 
@@ -3750,13 +3642,15 @@ class TxTable:
         Delta-style caveat: keep the retention window above the
         slowest consumer's lag — a stranded stream fails loudly (the
         files are gone), never silently wrong."""
-        vs = self._versions()
+        names = self.log_store.list_log(self.log_dir)
+        vs = self._versions(names)
         keep = vs[-keep_versions:]
         referenced: set[str] = set()
         s = None
         for v in keep:
-            # one replay for the oldest kept version, then the fold
-            s = self._snapshot(v) if s is None else s.apply(
+            # one replay for the oldest kept version, from the same
+            # listing, then the fold
+            s = self._snapshot(v, names) if s is None else s.apply(
                 v, self._read_action(v)
             )
             referenced.update(s.files)
@@ -4187,13 +4081,20 @@ class TxLogBatchWriter(DataSourceArrowWriter):
         return _TxWriteMessage(files, values)
 
     def commit(self, messages) -> None:
+        self._land(messages, self._txn)
+
+    def _land(self, messages, txn: tuple[str, int] | None) -> None:
+        """Commit the tasks' parts as one log commit stamped with
+        ``txn`` (``(app, batch)`` or None): the batch save's manual
+        idempotence pair, or the stream sink's epoch."""
         adds = [f for m in messages if m is not None for f in m.files]
         t = TxTable(None, self.path)
-        if self._txn is not None and t._versions():
-            last = t.txns().get(self._txn[0])
-            if last is not None and self._txn[1] <= last:
-                # already-committed txnVersion (a retried job): land
-                # nothing, drop the restaged parts
+        if txn is not None and t._versions():
+            last = t.txns().get(txn[0])
+            if last is not None and txn[1] <= last:
+                # already-committed txn (a retried job or a replayed
+                # epoch): land nothing, drop the restaged parts rather
+                # than leave them for vacuum
                 self.abort(messages)
                 return
         # partition values collected from the tasks ride into
@@ -4209,8 +4110,8 @@ class TxLogBatchWriter(DataSourceArrowWriter):
         # never saw. Any failure below aborts first, so uncommitted
         # parts never leak into the table root (r8 advisor finding).
         txn_extra = (
-            {"txn": {"app": self._txn[0], "batch": self._txn[1]}}
-            if self._txn is not None
+            {"txn": {"app": txn[0], "batch": txn[1]}}
+            if txn is not None
             else {}
         )
         try:
@@ -4236,11 +4137,12 @@ class TxLogBatchWriter(DataSourceArrowWriter):
                           extra=txn_extra or None)
             else:
                 t._commit_append(adds, validated_at=self._bound_version,
-                                 txn=self._txn)
+                                 txn=txn)
         except _TxnAlreadyCommitted:
-            # a concurrent retry of the same job won the race with the
-            # same txn id mid-rebase: the batch is already in the
-            # table — drop the restaged parts, land nothing
+            # a concurrent retry of the same job (or replay of the same
+            # epoch) won the race with the same txn id mid-rebase: the
+            # batch is already in the table — drop the restaged parts,
+            # land nothing
             self.abort(messages)
         except Exception:
             self.abort(messages)
@@ -4296,45 +4198,7 @@ class TxLogStreamWriter(TxLogBatchWriter, DataSourceStreamArrowWriter):
         self.app_id = str(app)
 
     def commit(self, messages, batchId: int) -> None:
-        t = TxTable(None, self.path)
-        if t._versions():
-            last = t.txns().get(self.app_id)
-            if last is not None and int(batchId) <= last:
-                # replayed epoch: its rows are already committed —
-                # drop the restaged parts (don't leave them for
-                # vacuum) and land nothing
-                self.abort(messages, batchId)
-                return
-        adds = [f for m in messages if m is not None for f in m.files]
-        for m in messages:
-            if m is not None:
-                t._last_partition_values.update(getattr(m, "values", {}))
-        try:
-            if not t._versions():
-                os.makedirs(self.path, exist_ok=True)
-                t._commit(
-                    0, adds, [], "create",
-                    stats=t._file_stats(adds),
-                    extra={
-                        "partition_by": list(self._pcols),
-                        "txn": {
-                            "app": self.app_id, "batch": int(batchId)
-                        },
-                    },
-                )
-            else:
-                t._commit_append(
-                    adds,
-                    validated_at=self._bound_version,
-                    txn=(self.app_id, int(batchId)),
-                )
-        except _TxnAlreadyCommitted:
-            # a replayed epoch landed concurrently mid-rebase — same
-            # drop-the-restaged-parts outcome as the pre-commit check
-            self.abort(messages, batchId)
-        except Exception:
-            self.abort(messages, batchId)
-            raise
+        self._land(messages, (self.app_id, int(batchId)))
 
     def abort(self, messages, batchId: int | None = None) -> None:
         TxLogBatchWriter.abort(self, messages)

@@ -2952,6 +2952,43 @@ def test_append_rebase_revalidates_raced_constraint(spark, tmp_path):
     assert sorted(r.k for r in t.read().collect()) == [1, 2, 50]
 
 
+def test_cow_dml_rebase_revalidates_raced_constraint(spark, tmp_path):
+    """A copy-on-write update that loses its race to an add-constraint
+    commit re-validates its updated rows before re-committing: a
+    violating update raises and lands nothing, a conforming one
+    rebases through. A delete writes no new rows, so it rebases
+    through the same race."""
+    p = str(tmp_path / "t")
+    t = TxTable.create(spark, p, _df(spark, [(1, "a"), (2, "b"), (3, "c")]))
+    t2 = TxTable(spark, p)
+
+    def racing(name, expr):
+        return TxTable(spark, p, log_store=InjectOnce(
+            t.log_store, lambda: t2.add_constraint(name, expr)
+        ))
+
+    with pytest.raises(ValueError, match="k_small"):
+        racing("k_small", "k < 100").update_where(
+            F.col("k") == 1, {"k": "k + 500"}
+        )
+    assert t.latest_version() == 1  # only the constraint commit landed
+    assert sorted(r.k for r in t.read().collect()) == [1, 2, 3]
+
+    v = racing("v_set", "v IS NOT NULL").update_where(
+        F.col("k") == 1, {"v": "'A'"}
+    )
+    assert v == 3
+    v = racing("k_pos", "k > 0").delete_where(F.col("k") == 2)
+    assert v == 5
+    assert [h["op"] for h in t.history()][1:] == [
+        "add-constraint", "add-constraint", "update", "add-constraint",
+        "delete",
+    ]
+    assert sorted((r.k, r.v) for r in t.read().collect()) == [
+        (1, "A"), (3, "c"),
+    ]
+
+
 def test_writer_side_protocol_guard(spark, tmp_path):
     """VERDICT r8 ask #8: WRITERS refuse newer-protocol logs too — a
     v1 writer appending into a half-understood v2 table would corrupt

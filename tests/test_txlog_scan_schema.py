@@ -280,18 +280,39 @@ def test_txlog_op_job_budget(spark, tmp_path):
 def test_delete_mor_job_budget(spark, tmp_path):
     """An equality delete materialises its matched keys once, with
     their counts observed in the same pass (2 jobs: the aggregate's
-    exchange and the checkpoint), then runs the over-delete guard (4)
-    and the one-file delete-key write (1). A budget may go down,
-    never up."""
+    exchange and the checkpoint), then runs the over-delete guard as
+    one semi-join count (3: the key broadcast, the snapshot scan and
+    the count's final aggregate) and the one-file delete-key write
+    (1). A budget may go down, never up."""
     t = TxTable.create(spark, str(tmp_path / "t"), spark.range(20).select(
         F.col("id").alias("k"), (F.col("id") * 10).alias("v")
     ).coalesce(1))
     jobs = jobs_in_group(
         spark, lambda: t.delete_where("k % 3 = 0", mode="mor", key="k")
     )
-    assert jobs == 7
+    assert jobs == 6
     assert sorted(r.k for r in t.read().collect()) == [
         k for k in range(20) if k % 3
+    ]
+
+
+def test_cow_dml_job_budget(spark, tmp_path):
+    """Copy-on-write DML on a table with no pending deletes: one
+    touched-file collect (2 jobs: the distinct's exchange and the
+    collect) and the rewrite of the touched files (1), for a delete
+    and an update alike. A budget may go down, never up."""
+    t = TxTable.create(spark, str(tmp_path / "t"), spark.range(20).select(
+        F.col("id").alias("k"), (F.col("id") * 10).alias("v")
+    ).coalesce(1))
+    jobs = {
+        "delete": jobs_in_group(spark, lambda: t.delete_where("k % 3 = 0")),
+        "update": jobs_in_group(
+            spark, lambda: t.update_where("k % 5 = 1", {"v": "v + 1"})
+        ),
+    }
+    assert jobs == {"delete": 3, "update": 3}
+    assert sorted((r.k, r.v) for r in t.read().collect()) == [
+        (k, k * 10 + (k % 5 == 1)) for k in range(20) if k % 3
     ]
 
 
@@ -309,7 +330,7 @@ LIST_BUDGET = {
     "read": 1,
     "optimize": 2,
     "checkpoint": 1,
-    "vacuum": 3,
+    "vacuum": 2,
 }
 
 
