@@ -13,11 +13,17 @@ all five scanline filters, ``operators.png``), MP4 container METADATA
 via dependency-free pure-numpy/stdlib codecs; payloads in any other
 format — including video tracks in codecs we cannot legally ship here
 (avc1/hevc) — fall back to a deterministic fake decoder (this
-container has no PIL/ffmpeg — swapping the fallback for a codec
-library is a one-function change inside the UDF).
+container has no PIL/ffmpeg — swapping an image codec for a library
+is a one-function change in ``_decode_image``, the sniff→decoder
+dispatch every image operator goes through).
 Everything Spark-side is real and tested either way: the schema,
 the binary column handling, the ``mapInPandas`` batch iteration, the
 output schema contract, and the partition-preserving shape.
+
+Two bodies hold every ``mapInPandas`` loop: ``_synth`` (id → payload,
+the fixture manufacturers) and ``_extract`` (payload → 0..n feature
+rows, the extractors, samplers and hashers). Each operator is its
+per-row function plus its docstring.
 
 Scale notes: binary payloads ride the columnar Parquet path (no
 base64); ``mapInPandas`` streams Arrow record batches so peak memory is
@@ -27,15 +33,103 @@ parallel (no shuffle).
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterable, Iterator
 
+import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from . import media_codecs as MC
+from .bmp import decode_bmp, encode_bmp
+from .gif import decode_gif, decode_gif_frames, encode_gif, encode_gif_animated
+from .jpeg import classify_jpeg, decode_jpeg, encode_jpeg, encode_jpeg_progressive
+from .mp4 import (
+    encode_minimal_mp4,
+    encode_mjpeg_mp4,
+    extract_video_samples,
+    parse_mp4,
+    sniff_mp4,
+)
+from .png import decode_png, encode_png
 
 FEATURE_SCHEMA = (
     "doc_id long, n_bytes long, fake_mean double, fake_first long, decoder string"
 )
+
+
+def _synth(docs: DataFrame, id_col: str, payload_of: Callable,
+           memo_key: Callable | None = None,
+           text_col: str | None = None) -> DataFrame:
+    """The one synthesis body: ``(doc_id, media)`` with ``media =
+    payload_of(id)`` per row (``payload_of(text)`` when ``text_col`` is
+    given). With ``memo_key``, each worker builds one payload per
+    distinct ``memo_key(id)`` — the pure-Python encoders run once per
+    distinct image, while the decode side under test still runs on every
+    row."""
+
+    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        memo: dict = {}
+        for pdf in it:
+            args = pdf[text_col] if text_col else [int(i) for i in pdf[id_col]]
+            if memo_key is None:
+                payloads = [payload_of(a) for a in args]
+            else:
+                payloads = []
+                for a in args:
+                    key = memo_key(a)
+                    if key not in memo:
+                        memo[key] = payload_of(a)
+                    payloads.append(memo[key])
+            yield pd.DataFrame({"doc_id": pdf[id_col], "media": payloads})
+
+    cols = [id_col, text_col] if text_col else [id_col]
+    return docs.select(*cols).mapInPandas(batches, "doc_id long, media binary")
+
+
+def _extract(media_df: DataFrame, id_col: str,
+             rows_of: Callable[[bytes | None], Iterable[tuple]],
+             schema: str) -> DataFrame:
+    """The one extraction body: each ``media`` payload becomes the rows
+    ``(doc_id, *row) for row in rows_of(payload)`` — one row for a
+    per-payload feature, several for a frame sampler's fan-out, none to
+    skip the payload. ``schema`` is a flat DDL string whose first field
+    is the id. Columns reach Arrow as Python objects, so NULLs and
+    63-bit hashes arrive exact (a pandas-inferred float64 column would
+    round them)."""
+    names = [field.split()[0] for field in schema.split(",")]
+
+    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in it:
+            rows = [(doc_id, *row)
+                    for doc_id, payload in zip(pdf[id_col], pdf["media"])
+                    for row in rows_of(payload)]
+            cols = list(zip(*rows)) or [()] * len(names)
+            yield pd.DataFrame(
+                {n: pd.Series(c, dtype=object) for n, c in zip(names, cols)}
+            )
+
+    return media_df.mapInPandas(batches, schema)
+
+
+def _hash_clusters(hashes: DataFrame, hash_col: str, id_col: str) -> DataFrame:
+    """Cluster ``(doc_id, hash_col)`` rows on the exact hash: per row,
+    the family size and whether it is the min-id (canonical) member.
+    NULL hashes (undecodable payloads) drop out. The rollup is a window
+    over the hash partition, so the hashes are computed once."""
+    w = Window.partitionBy(hash_col)
+    return hashes.filter(F.col(hash_col).isNotNull()).select(
+        F.col("doc_id").alias(id_col),
+        F.count(F.lit(1)).over(w).alias("n_copies"),
+        (F.col("doc_id") == F.min("doc_id").over(w)).alias("is_canonical"),
+    )
+
+
+def _gradient(i: int, h: int) -> np.ndarray:
+    """(h, 256, 1) uint8 gray gradient, pixel(y, x) = (x + y + i) % 256:
+    every row spans all 256 residues, so its mean is exactly 127.5."""
+    yy, xx = np.mgrid[0:h, 0:256]
+    return ((xx + yy + i) % 256).astype(np.uint8)[:, :, None]
 
 
 def attach_media(docs: DataFrame, text_col: str, id_col: str) -> DataFrame:
@@ -70,6 +164,28 @@ def _fake_decode(payload: bytes) -> dict:
     }
 
 
+class _NotAnImage(ValueError):
+    """The payload does not sniff as any image format ``_decode_image``
+    knows (as opposed to an image payload that fails to decode)."""
+
+
+def _decode_image(b: bytes) -> tuple[dict, str, str]:
+    """The one image sniff→decoder dispatch (PPM/JPEG/PNG/GIF/BMP):
+    ``(decoded, kind, tag)``, where ``decoded`` is the codec's
+    ``{width, height, channels, pixels, ...}`` and ``tag`` is the
+    decoder tag, ``jpeg-{mode}-v1`` or ``{kind}-v1``. A new format or a
+    decoder contract change lands here once. Raises ``_NotAnImage``
+    when the payload sniffs as no image, and the codec's error when an
+    image payload is corrupt."""
+    kind = MC.sniff_format(b)
+    decode = {"ppm": MC.decode_ppm, "jpeg": decode_jpeg, "png": decode_png,
+              "gif": decode_gif, "bmp": decode_bmp}.get(kind)
+    if decode is None:
+        raise _NotAnImage(f"not a decodable image payload ({kind})")
+    d = decode(b)
+    return d, kind, f"jpeg-{d['mode']}-v1" if kind == "jpeg" else f"{kind}-v1"
+
+
 def _decode(payload: bytes) -> dict:
     """Format-dispatched decode: real RIFF/PCM parse for WAV, real
     netpbm parse for PPM/PGM, deterministic fake for anything else.
@@ -80,14 +196,10 @@ def _decode(payload: bytes) -> dict:
     with ``P6 `` sniffs as PPM — and a malformed payload must degrade
     to the fake decoder (tagged ``-invalid``), never abort the Spark
     task: one bad row would otherwise kill the whole job."""
-    from . import media_codecs as MC
-
     kind = MC.sniff_format(payload)
     try:
         if kind == "wav":
             w = MC.decode_wav(payload)
-            import numpy as np
-
             return {
                 "n_bytes": len(payload),
                 "fake_mean": float(np.abs(w["samples"]).mean())
@@ -96,71 +208,27 @@ def _decode(payload: bytes) -> dict:
                 "fake_first": w["n_samples"],
                 "decoder": f"wav-pcm{w['bits']}-v1",
             }
-        if kind == "ppm":
-            p = MC.decode_ppm(payload)
-            return {
-                "n_bytes": len(payload),
-                "fake_mean": float(p["pixels"].mean()),
-                "fake_first": p["width"] * p["height"],
-                "decoder": "ppm-v1",
-            }
-        if kind == "jpeg":
-            from .jpeg import decode_jpeg
-
-            j = decode_jpeg(payload)
-            return {
-                "n_bytes": len(payload),
-                "fake_mean": float(j["pixels"].mean()),
-                "fake_first": j["width"] * j["height"],
-                "decoder": f"jpeg-{j['mode']}-v1",
-            }
-        if kind == "png":
-            from .png import decode_png
-
-            p = decode_png(payload)
-            return {
-                "n_bytes": len(payload),
-                "fake_mean": float(p["pixels"].mean()),
-                "fake_first": p["width"] * p["height"],
-                "decoder": "png-v1",
-            }
-        if kind == "gif":
-            from .gif import decode_gif
-
-            g = decode_gif(payload)
-            return {
-                "n_bytes": len(payload),
-                "fake_mean": float(g["pixels"].mean()),
-                "fake_first": g["width"] * g["height"],
-                "decoder": "gif-v1",
-            }
-        if kind == "bmp":
-            from .bmp import decode_bmp
-
-            d = decode_bmp(payload)
-            return {
-                "n_bytes": len(payload),
-                "fake_mean": float(d["pixels"].mean()),
-                "fake_first": d["width"] * d["height"],
-                "decoder": "bmp-v1",
-            }
+        d, _, tag = _decode_image(payload)
+        return {
+            "n_bytes": len(payload),
+            "fake_mean": float(d["pixels"].mean()),
+            "fake_first": d["width"] * d["height"],
+            "decoder": tag,
+        }
+    except _NotAnImage:
+        return _fake_decode(payload)
     except Exception:
         out = _fake_decode(payload)
-        if kind == "jpeg":
-            from .jpeg import classify_jpeg
-
-            # a VALID lossless/hierarchical/arithmetic JPEG is not
-            # corruption — tag the class so curation reports count it
-            # honestly instead of lumping it into the corrupt channel.
-            # (Progressive SOF2 decodes for real since round 5, so a
-            # failing progressive payload IS corrupt and falls through.)
-            cls = classify_jpeg(payload)
-            if cls == "other-sof":
-                out["decoder"] = f"jpeg-{cls}-unsupported"
-                return out
-        out["decoder"] = "fake-v0-invalid"
+        # a VALID lossless/hierarchical/arithmetic JPEG is not
+        # corruption — tag the class so curation reports count it
+        # honestly instead of lumping it into the corrupt channel.
+        # (Progressive SOF2 decodes for real since round 5, so a
+        # failing progressive payload IS corrupt and falls through.)
+        if kind == "jpeg" and classify_jpeg(payload) == "other-sof":
+            out["decoder"] = "jpeg-other-sof-unsupported"
+        else:
+            out["decoder"] = "fake-v0-invalid"
         return out
-    return _fake_decode(payload)
 
 
 RESIZE_SCHEMA = "doc_id long, width int, height int, n_bytes long, decoder string"
@@ -176,37 +244,23 @@ def resize_images(media_df: DataFrame, width: int = 224, height: int = 224,
     deterministic size stub (no PIL/cv2 here). Spark-side contract —
     binary in, fixed (width, height, bytes) out, Arrow batching, zero
     shuffle — identical on both paths."""
-    from . import media_codecs as MC
 
-    def one(b: bytes | None) -> tuple[int, str]:
+    def rows_of(b):
         if not b:
-            return 0, "fake-resize-v0"
-        kind = MC.sniff_format(b)
-        if kind in ("ppm", "jpeg", "png", "gif", "bmp"):
-            try:
-                pixels, kind = _decode_pixels(bytes(b))
-                resized = MC.resize_nearest(pixels, width, height)
-                return len(MC.encode_ppm(resized)), f"{kind}-nn-v1"
-            except Exception:
-                # sniff false-positive / malformed image: degrade, don't
-                # abort the task
-                return min(len(b), width * height * 3), "fake-resize-v0-invalid"
-        return min(len(b), width * height * 3), "fake-resize-v0"
+            return [(width, height, 0, "fake-resize-v0")]
+        try:
+            pixels, kind = _decode_pixels(bytes(b))
+            resized = MC.resize_nearest(pixels, width, height)
+            return [(width, height, len(MC.encode_ppm(resized)), f"{kind}-nn-v1")]
+        except _NotAnImage:
+            tag = "fake-resize-v0"
+        except Exception:
+            # sniff false-positive / malformed image: degrade, don't
+            # abort the task
+            tag = "fake-resize-v0-invalid"
+        return [(width, height, min(len(b), width * height * 3), tag)]
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            sized = [one(b) for b in pdf["media"]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col],
-                    "width": width,
-                    "height": height,
-                    "n_bytes": [n for n, _ in sized],
-                    "decoder": [d for _, d in sized],
-                }
-            )
-
-    return media_df.mapInPandas(batches, RESIZE_SCHEMA)
+    return _extract(media_df, id_col, rows_of, RESIZE_SCHEMA)
 
 
 def resize_images_area(media_df: DataFrame, width: int = 224,
@@ -217,29 +271,18 @@ def resize_images_area(media_df: DataFrame, width: int = 224,
     shared dispatch, box-average via media_codecs.resize_area, and emit
     the resized dims + mean pixel. mapInPandas, zero shuffle; corrupt
     rows degrade per-row."""
-    from . import media_codecs as MC
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, means, tags = [], [], []
-            for doc_id, b in zip(pdf[id_col], pdf["media"]):
-                ids.append(doc_id)
-                try:
-                    pixels, kind = _decode_pixels(bytes(b))
-                    resized = MC.resize_area(pixels, width, height)
-                    means.append(float(resized.mean()))
-                    tags.append(f"{kind}-area-v1")
-                except Exception:
-                    means.append(-1.0)
-                    tags.append("fake-area-v0-invalid")
-            yield pd.DataFrame(
-                {"doc_id": ids, "width": width, "height": height,
-                 "mean_pixel": means, "decoder": tags}
-            )
+    def rows_of(b):
+        try:
+            pixels, kind = _decode_pixels(bytes(b))
+            mean = float(MC.resize_area(pixels, width, height).mean())
+            return [(width, height, mean, f"{kind}-area-v1")]
+        except Exception:
+            return [(width, height, -1.0, "fake-area-v0-invalid")]
 
-    return media_df.mapInPandas(
-        batches, "doc_id long, width int, height int, "
-                 "mean_pixel double, decoder string"
+    return _extract(
+        media_df, id_col, rows_of,
+        "doc_id long, width int, height int, mean_pixel double, decoder string",
     )
 
 
@@ -249,25 +292,8 @@ def synth_gradient_ppm(docs: DataFrame, id_col: str) -> DataFrame:
     {v, v+1, v+1, v+2} whose sum is divisible by 4 even across the
     mod-256 wrap, so every area-averaged output pixel is an EXACT
     integer the SQL oracle recomputes cell by cell."""
-    from . import media_codecs as MC
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        cache: dict[int, bytes] = {}
-        for pdf in it:
-            payloads = []
-            for i in pdf[id_col]:
-                i = int(i)
-                payload = cache.get(i % 256)
-                if payload is None:
-                    g = ((np.arange(256)[None, :] + np.arange(4)[:, None] + i)
-                         % 256).astype(np.uint8)
-                    payload = cache[i % 256] = MC.encode_ppm(g[:, :, None])
-                payloads.append(payload)
-            yield pd.DataFrame({"doc_id": pdf[id_col], "media": payloads})
-
-    return docs.select(id_col).mapInPandas(batches, "doc_id long, media binary")
+    return _synth(docs, id_col, lambda i: MC.encode_ppm(_gradient(i, 4)),
+                  memo_key=lambda i: i % 256)
 
 
 def sample_frames(media_df: DataFrame, every_n_bytes: int = 1024,
@@ -282,37 +308,26 @@ def sample_frames(media_df: DataFrame, every_n_bytes: int = 1024,
     this environment — each slice stands in for a decoded keyframe).
     Non-BMFF payloads fall back to whole-payload slices. The fan-out
     schema and Arrow batch handling are identical on both paths."""
-    from .mp4 import parse_mp4, sniff_mp4
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, idxs, frames, tags = [], [], [], []
-            for doc_id, payload in zip(pdf[id_col], pdf["media"]):
-                if payload is None:
-                    continue
-                region, tag = payload, "fake-framesample-v0"
-                if sniff_mp4(payload):
-                    try:
-                        meta = parse_mp4(payload)
-                        if meta["mdat_bytes"]:
-                            # real sample-data bounds from the box walk
-                            start = meta["mdat_offset"]
-                            region = payload[start : start + meta["mdat_bytes"]]
-                            tag = "mp4-slice-v1"
-                    except ValueError:
-                        tag = "fake-framesample-v0-invalid"
-                n = min(max_frames, max(1, len(region) // every_n_bytes))
-                for i in range(n):
-                    ids.append(doc_id)
-                    idxs.append(i)
-                    frames.append(bytes(region[i * every_n_bytes:(i + 1) * every_n_bytes]))
-                    tags.append(tag)
-            yield pd.DataFrame(
-                {"doc_id": ids, "frame_idx": idxs, "frame_bytes": frames,
-                 "decoder": tags}
-            )
+    def rows_of(payload):
+        if payload is None:
+            return []
+        region, tag = payload, "fake-framesample-v0"
+        if sniff_mp4(payload):
+            try:
+                meta = parse_mp4(payload)
+                if meta["mdat_bytes"]:
+                    # real sample-data bounds from the box walk
+                    start = meta["mdat_offset"]
+                    region = payload[start : start + meta["mdat_bytes"]]
+                    tag = "mp4-slice-v1"
+            except ValueError:
+                tag = "fake-framesample-v0-invalid"
+        n = min(max_frames, max(1, len(region) // every_n_bytes))
+        return [(i, bytes(region[i * every_n_bytes:(i + 1) * every_n_bytes]), tag)
+                for i in range(n)]
 
-    return media_df.mapInPandas(batches, FRAME_SCHEMA)
+    return _extract(media_df, id_col, rows_of, FRAME_SCHEMA)
 
 
 AUDIO_SCHEMA = (
@@ -330,57 +345,28 @@ def extract_audio_features(media_df: DataFrame, window_bytes: int = 2048,
     a deterministic byte-slice stub (no torchaudio/librosa here). The
     schema, fixed-length feature vector, and Arrow batch shape are
     identical on both paths."""
-    from . import media_codecs as MC
 
-    def features(payload: bytes | None) -> tuple[int, float, list[float], str]:
+    def rows_of(payload):
         if not payload:
-            return 0, 0.0, [0.0] * n_bands, "fake-audio-v0"
+            return [(0, 0.0, [0.0] * n_bands, "fake-audio-v0")]
+        tag = "fake-audio-v0"
         if MC.sniff_format(payload) == "wav":
             try:
                 w = MC.decode_wav(payload)
                 n_windows = max(1, w["n_samples"] // window_bytes)
                 bands = MC.wav_band_energies(w["samples"], n_bands)
-                return n_windows, w["duration_s"], bands, f"wav-pcm{w['bits']}-v1"
+                return [(n_windows, w["duration_s"], bands, f"wav-pcm{w['bits']}-v1")]
             except Exception:
                 # sniff false-positive / malformed: byte-slice stub,
                 # tagged so corruption is countable like the other paths
-                n_windows = max(1, len(payload) // window_bytes)
-                step = max(1, len(payload) // n_bands)
-                bands = [
-                    (
-                        sum(payload[i * step : (i + 1) * step])
-                        / max(1, len(payload[i * step : (i + 1) * step]))
-                    )
-                    for i in range(n_bands)
-                ]
-                return (
-                    n_windows,
-                    len(payload) / window_bytes,
-                    bands,
-                    "fake-audio-v0-invalid",
-                )
-        n_windows = max(1, len(payload) // window_bytes)
+                tag = "fake-audio-v0-invalid"
         step = max(1, len(payload) // n_bands)
-        bands = [
-            (sum(payload[i * step:(i + 1) * step]) / max(1, len(payload[i * step:(i + 1) * step])))
-            for i in range(n_bands)
-        ]
-        return n_windows, len(payload) / window_bytes, bands, "fake-audio-v0"
+        slices = [payload[i * step:(i + 1) * step] for i in range(n_bands)]
+        bands = [sum(s) / max(1, len(s)) for s in slices]
+        return [(max(1, len(payload) // window_bytes), len(payload) / window_bytes,
+                 bands, tag)]
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = [features(p) for p in pdf["media"]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col],
-                    "n_windows": [r[0] for r in rows],
-                    "duration_proxy": [r[1] for r in rows],
-                    "band_energy": [r[2] for r in rows],
-                    "decoder": [r[3] for r in rows],
-                }
-            )
-
-    return media_df.mapInPandas(batches, AUDIO_SCHEMA)
+    return _extract(media_df, id_col, rows_of, AUDIO_SCHEMA)
 
 
 WAV_META_SCHEMA = (
@@ -395,23 +381,9 @@ def synth_wav(docs: DataFrame, text_col: str, id_col: str,
     UTF-8 byte of the text becomes one unsigned 8-bit PCM sample in a
     valid RIFF container. Deterministic, so decoded metadata has an
     arithmetic ground truth (n_samples = octet_length(text))."""
-    from . import media_codecs as MC
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col],
-                    "media": [
-                        MC.encode_wav_pcm8(t.encode("utf-8"), sample_rate)
-                        for t in pdf[text_col]
-                    ],
-                }
-            )
-
-    return docs.select(id_col, text_col).mapInPandas(
-        batches, "doc_id long, media binary"
-    )
+    return _synth(docs, id_col,
+                  lambda t: MC.encode_wav_pcm8(t.encode("utf-8"), sample_rate),
+                  text_col=text_col)
 
 
 def extract_wav_meta(media_df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -419,24 +391,13 @@ def extract_wav_meta(media_df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     PCM decode — media_codecs.decode_wav) and emit the decoded
     metadata. Raises on non-WAV payloads: this operator IS the decode
     proof, silent fallback would defeat it."""
-    from . import media_codecs as MC
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ws = [MC.decode_wav(b) for b in pdf["media"]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col],
-                    "n_channels": [w["n_channels"] for w in ws],
-                    "sample_rate": [w["sample_rate"] for w in ws],
-                    "bits": [w["bits"] for w in ws],
-                    "n_samples": [w["n_samples"] for w in ws],
-                    "duration_s": [w["duration_s"] for w in ws],
-                    "decoder": [f"wav-pcm{w['bits']}-v1" for w in ws],
-                }
-            )
+    def rows_of(b):
+        w = MC.decode_wav(b)
+        return [(w["n_channels"], w["sample_rate"], w["bits"], w["n_samples"],
+                 w["duration_s"], f"wav-pcm{w['bits']}-v1")]
 
-    return media_df.mapInPandas(batches, WAV_META_SCHEMA)
+    return _extract(media_df, id_col, rows_of, WAV_META_SCHEMA)
 
 
 SPECTRAL_SCHEMA = (
@@ -452,22 +413,14 @@ def synth_wav_tone(docs: DataFrame, id_col: str, sample_rate: int = 8000,
     adds broadband noise ~40 dB below the tone, so the tone's FFT bin
     stays the unambiguous argmax — giving the spectral extractor an
     arithmetic ground truth."""
-    from . import media_codecs as MC
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def payload(i):
+        f = 100.0 + 100.0 * (i % 20)
+        wave = 128.0 + 100.0 * np.sin(2 * np.pi * f * np.arange(n_samples) / sample_rate)
+        raw = np.clip(np.round(wave), 0, 255).astype(np.uint8).tobytes()
+        return MC.encode_wav_pcm8(raw, sample_rate)
 
-        t = np.arange(n_samples)
-        for pdf in it:
-            payloads = []
-            for i in pdf[id_col]:
-                f = 100.0 + 100.0 * (int(i) % 20)
-                wave = 128.0 + 100.0 * np.sin(2 * np.pi * f * t / sample_rate)
-                raw = np.clip(np.round(wave), 0, 255).astype(np.uint8).tobytes()
-                payloads.append(MC.encode_wav_pcm8(raw, sample_rate))
-            yield pd.DataFrame({"doc_id": pdf[id_col], "media": payloads})
-
-    return docs.select(id_col).mapInPandas(batches, "doc_id long, media binary")
+    return _synth(docs, id_col, payload)
 
 
 def extract_audio_spectral(media_df: DataFrame, id_col: str = "doc_id",
@@ -479,30 +432,13 @@ def extract_audio_spectral(media_df: DataFrame, id_col: str = "doc_id",
     payloads (this operator is a decode+DSP proof). mapInPandas,
     zero shuffle; FFT cost is O(n_fft log n_fft) per row, vectorized
     in numpy per Arrow batch."""
-    from . import media_codecs as MC
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def rows_of(b):
+        w = MC.decode_wav(b)
+        mag = np.abs(np.fft.rfft(w["samples"][:n_fft], n=n_fft))
+        return [(w["n_samples"], int(np.argmax(mag[1:])) + 1, "wav-rfft-v1")]  # skip DC
 
-        for pdf in it:
-            ids, ns, bins = [], [], []
-            for i, b in zip(pdf[id_col], pdf["media"]):
-                w = MC.decode_wav(b)
-                s = w["samples"][:n_fft]
-                mag = np.abs(np.fft.rfft(s, n=n_fft))
-                ids.append(i)
-                ns.append(w["n_samples"])
-                bins.append(int(np.argmax(mag[1:])) + 1)  # skip DC
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "n_samples": ns,
-                    "dominant_bin": np.array(bins, dtype="int32"),
-                    "decoder": "wav-rfft-v1",
-                }
-            )
-
-    return media_df.mapInPandas(batches, SPECTRAL_SCHEMA)
+    return _extract(media_df, id_col, rows_of, SPECTRAL_SCHEMA)
 
 
 def synth_mixed_media(docs: DataFrame, id_col: str,
@@ -514,33 +450,19 @@ def synth_mixed_media(docs: DataFrame, id_col: str,
     TRUNCATED (6 bytes) to exercise the corrupt-payload path the way a
     real crawl does. The pipeline entry proves dispatch + decode +
     error-channel filtering end-to-end against a SQL oracle."""
-    from . import media_codecs as MC
-    from .jpeg import encode_jpeg
-    from .png import encode_png
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def payload(i):
+        v = i % 256
+        if i % 3 == 0:
+            p = MC.encode_wav_pcm8(bytes([v]) * 400, 8000)
+        elif i % 3 == 1:
+            p = encode_jpeg(np.full((16, 16, 1), v, dtype=np.uint8))
+        else:
+            p = encode_png(_gradient(i, 2))
+        # truncated mid-header: must not kill the task
+        return p[:6] if i % corrupt_every == 7 else p
 
-        for pdf in it:
-            payloads = []
-            for i in pdf[id_col]:
-                i = int(i)
-                v = i % 256
-                if i % 3 == 0:
-                    p = MC.encode_wav_pcm8(bytes([v]) * 400, 8000)
-                elif i % 3 == 1:
-                    p = encode_jpeg(np.full((16, 16, 1), v, dtype=np.uint8))
-                else:
-                    h = 2
-                    yy, xx = np.mgrid[0:h, 0:256]
-                    px = ((xx + yy + i) % 256).astype(np.uint8)[:, :, None]
-                    p = encode_png(px)
-                if i % corrupt_every == 7:
-                    p = p[:6]  # truncated mid-header: must not kill the task
-                payloads.append(p)
-            yield pd.DataFrame({"doc_id": pdf[id_col], "media": payloads})
-
-    return docs.select(id_col).mapInPandas(batches, "doc_id long, media binary")
+    return _synth(docs, id_col, payload)
 
 
 VIDEO_META_SCHEMA = (
@@ -554,25 +476,13 @@ def synth_mp4(docs: DataFrame, id_col: str) -> DataFrame:
     = 0.5 * (1 + id % 24) s at a 1000 timescale, dimensions and mdat
     size arithmetic in the id — a valid ftyp/moov/mdat file whose
     parsed metadata has exact ground truth."""
-    from .mp4 import encode_minimal_mp4
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = []
-            for i in pdf[id_col]:
-                i = int(i)
-                payloads.append(
-                    encode_minimal_mp4(
-                        duration=500 * (1 + i % 24),
-                        timescale=1000,
-                        width=16 * (4 + i % 5),
-                        height=16 * (3 + i % 3),
-                        mdat=b"\x00" * (1 + i % 97),
-                    )
-                )
-            yield pd.DataFrame({"doc_id": pdf[id_col], "media": payloads})
-
-    return docs.select(id_col).mapInPandas(batches, "doc_id long, media binary")
+    return _synth(docs, id_col, lambda i: encode_minimal_mp4(
+        duration=500 * (1 + i % 24),
+        timescale=1000,
+        width=16 * (4 + i % 5),
+        height=16 * (3 + i % 3),
+        mdat=b"\x00" * (1 + i % 97),
+    ))
 
 
 def extract_video_meta(media_df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -582,24 +492,13 @@ def extract_video_meta(media_df: DataFrame, id_col: str = "doc_id") -> DataFrame
     Raises on non-BMFF payloads: this operator IS the video-container
     proof (frame decode lives in ``sample_video_frames`` — real for
     Motion-JPEG tracks, opaque-tagged for codecs not present here)."""
-    from .mp4 import parse_mp4
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ms = [parse_mp4(b) for b in pdf["media"]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col],
-                    "duration_s": [m["duration_s"] for m in ms],
-                    "n_tracks": [m["n_tracks"] for m in ms],
-                    "video_width": [m["video_width"] for m in ms],
-                    "video_height": [m["video_height"] for m in ms],
-                    "mdat_bytes": [m["mdat_bytes"] for m in ms],
-                    "decoder": "mp4-bmff-v1",
-                }
-            )
+    def rows_of(b):
+        m = parse_mp4(b)
+        return [(m["duration_s"], m["n_tracks"], m["video_width"],
+                 m["video_height"], m["mdat_bytes"], "mp4-bmff-v1")]
 
-    return media_df.mapInPandas(batches, VIDEO_META_SCHEMA)
+    return _extract(media_df, id_col, rows_of, VIDEO_META_SCHEMA)
 
 
 IMAGE_META_SCHEMA = (
@@ -617,31 +516,13 @@ def synth_jpeg(docs: DataFrame, id_col: str) -> DataFrame:
     the decode is BIT-EXACT — giving ``extract_image_meta`` an
     arithmetic SQL oracle that actually checks the decoder (a wrong
     IDCT, Huffman walk, or SOF parse shifts mean_pixel/width/height)."""
-    from .jpeg import encode_jpeg
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def payload(i):
+        w, h = 16 + 8 * (i % 3), 8 + 8 * (i % 2)
+        return encode_jpeg(np.full((h, w, 1), i % 256, dtype=np.uint8))
 
-        # the fixture space is tiny ((id%6 dims) × (id%256 values) =
-        # 1536 distinct payloads): memoize per worker so the pure-
-        # Python encoder runs once per distinct image, not once per
-        # row. The decode side — the thing under test — still runs on
-        # every row.
-        cache: dict[int, bytes] = {}
-        for pdf in it:
-            payloads = []
-            for i in pdf[id_col]:
-                i = int(i)
-                key = (i % 6) * 256 + (i % 256)
-                payload = cache.get(key)
-                if payload is None:
-                    w, h = 16 + 8 * (i % 3), 8 + 8 * (i % 2)
-                    px = np.full((h, w, 1), i % 256, dtype=np.uint8)
-                    payload = cache[key] = encode_jpeg(px)
-                payloads.append(payload)
-            yield pd.DataFrame({"doc_id": pdf[id_col], "media": payloads})
-
-    return docs.select(id_col).mapInPandas(batches, "doc_id long, media binary")
+    # (id%6 dims) × (id%256 values) = 1536 distinct payloads
+    return _synth(docs, id_col, payload, memo_key=lambda i: (i % 6, i % 256))
 
 
 def synth_jpeg_progressive(docs: DataFrame, id_col: str) -> DataFrame:
@@ -656,63 +537,26 @@ def synth_jpeg_progressive(docs: DataFrame, id_col: str) -> DataFrame:
     all-zero bands exercise multi-block EOB runs, and AC refinement
     scans. A wrong DC point transform, EOBRUN decode, or refinement
     bit shifts mean_pixel and fails the arithmetic oracle."""
-    from .jpeg import encode_jpeg_progressive
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def payload(i):
+        px = np.empty((16, 16 + 8 * (i % 3), 1), dtype=np.uint8)
+        px[:8] = i % 256
+        px[8:] = (i * 31) % 256
+        return encode_jpeg_progressive(px)
 
-        cache: dict[int, bytes] = {}
-        for pdf in it:
-            payloads = []
-            for i in pdf[id_col]:
-                i = int(i)
-                v1, v2, wsel = i % 256, (i * 31) % 256, i % 3
-                key = (v1 * 256 + v2) * 3 + wsel
-                payload = cache.get(key)
-                if payload is None:
-                    w = 16 + 8 * wsel
-                    px = np.empty((16, w, 1), dtype=np.uint8)
-                    px[:8] = v1
-                    px[8:] = v2
-                    payload = cache[key] = encode_jpeg_progressive(px)
-                payloads.append(payload)
-            yield pd.DataFrame({"doc_id": pdf[id_col], "media": payloads})
-
-    return docs.select(id_col).mapInPandas(batches, "doc_id long, media binary")
+    return _synth(docs, id_col, payload,
+                  memo_key=lambda i: (i % 256, (i * 31) % 256, i % 3))
 
 
 def _decode_pixels(b: bytes):
     """Decode any supported image payload (PPM/JPEG/PNG/GIF/BMP) to
-    ``(pixels, kind)`` — the ONE sniff→decoder dispatch shared by
-    every pixel-level operator (pHash, resize): a new format or a
-    decoder contract change lands here once. Alpha planes are dropped
-    (RGBA→RGB, gray+alpha→gray) so downstream math sees uniform
-    RGB/gray. Raises ValueError for non-image/corrupt payloads."""
-    from . import media_codecs as MC
-
-    kind = MC.sniff_format(b)
-    if kind == "ppm":
-        px = MC.decode_ppm(b)["pixels"]
-    elif kind == "jpeg":
-        from .jpeg import decode_jpeg
-
-        px = decode_jpeg(b)["pixels"]
-    elif kind == "png":
-        from .png import decode_png
-
-        px = decode_png(b)["pixels"]
-    elif kind == "gif":
-        from .gif import decode_gif
-
-        px = decode_gif(b)["pixels"]
-    elif kind == "bmp":
-        from .bmp import decode_bmp
-
-        px = decode_bmp(b)["pixels"]
-    else:
-        raise ValueError(f"not a decodable image payload ({kind})")
-    px = px[..., :3] if px.shape[-1] >= 3 else px[..., :1]
-    return px, kind
+    ``(pixels, kind)`` through ``_decode_image``, for the pixel-level
+    operators (pHash, resize). Alpha planes are dropped (RGBA→RGB,
+    gray+alpha→gray) so downstream math sees uniform RGB/gray. Raises
+    ValueError for non-image/corrupt payloads."""
+    d, kind, _ = _decode_image(b)
+    px = d["pixels"]
+    return (px[..., :3] if px.shape[-1] >= 3 else px[..., :1]), kind
 
 
 def phash64(pixels) -> int:
@@ -722,10 +566,6 @@ def phash64(pixels) -> int:
     deterministic (pure float64 arithmetic on uint8 inputs, median of
     63 values), and invariant to uniform brightness shifts by
     construction (only the discarded DC coefficient changes)."""
-    import numpy as np
-
-    from . import media_codecs as MC
-
     px = np.asarray(pixels, dtype=np.float64)
     if px.ndim == 3:
         px = px.mean(axis=2)
@@ -752,29 +592,17 @@ def image_phash(media_df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     hash column replaces the image bytes in every downstream dedup
     exchange."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ids, hashes, tags = [], [], []
-        for pdf in it:
-            for doc_id, b in zip(pdf[id_col], pdf["media"]):
-                ids.append(doc_id)
-                if not b:
-                    hashes.append(None)
-                    tags.append("phash-v1-empty")
-                    continue
-                try:
-                    px, _ = _decode_pixels(bytes(b))
-                    # phash64 packs 63 bits (indices 0..62), so the
-                    # value always fits a signed int64 as-is
-                    hashes.append(phash64(px))
-                    tags.append("phash-v1")
-                except ValueError:
-                    hashes.append(None)
-                    tags.append("phash-v1-invalid")
-            yield pd.DataFrame({"doc_id": ids, "phash": pd.array(hashes, dtype="Int64"),
-                                "decoder": tags})
-            ids, hashes, tags = [], [], []
+    def rows_of(b):
+        if not b:
+            return [(None, "phash-v1-empty")]
+        try:
+            # phash64 packs 63 bits (indices 0..62), so the value
+            # always fits a signed int64 as-is
+            return [(phash64(_decode_pixels(bytes(b))[0]), "phash-v1")]
+        except ValueError:
+            return [(None, "phash-v1-invalid")]
 
-    return media_df.mapInPandas(batches, "doc_id long, phash long, decoder string")
+    return _extract(media_df, id_col, rows_of, "doc_id long, phash long, decoder string")
 
 
 def dedup_image_phash(media_df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -788,15 +616,7 @@ def dedup_image_phash(media_df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     groupBy+join-back would re-run the decode for the probe side or
     need a persist the lazy return could leak). Near-dup (Hamming ≤ 3)
     pairs are available via ``image_phash`` + ``dedup.hamming_pairs``."""
-    from pyspark.sql import Window
-
-    hashes = image_phash(media_df, id_col).filter(F.col("phash").isNotNull())
-    w = Window.partitionBy("phash")
-    return hashes.select(
-        F.col("doc_id").alias(id_col),
-        F.count(F.lit(1)).over(w).alias("n_copies"),
-        (F.col("doc_id") == F.min("doc_id").over(w)).alias("is_canonical"),
-    )
+    return _hash_clusters(image_phash(media_df, id_col), "phash", id_col)
 
 
 def audio_fingerprint(samples, n_windows: int = 8, win: int = 1024) -> int:
@@ -806,8 +626,6 @@ def audio_fingerprint(samples, n_windows: int = 8, win: int = 1024) -> int:
     construction — argmax doesn't move under uniform gain — so the
     same recording at different volumes collapses to one fingerprint
     (the audio analog of pHash's brightness invariance)."""
-    import numpy as np
-
     fp = 0
     for k in range(n_windows):
         w = np.asarray(samples[k * win:(k + 1) * win], dtype=np.float64)
@@ -825,29 +643,18 @@ def extract_audio_fingerprint(media_df: DataFrame,
     """Per-payload audio fingerprint over mapInPandas: WAV payloads
     decode for real (RIFF parse → PCM → windowed rFFT); corrupt or
     non-WAV rows degrade per-row (null fingerprint, tagged)."""
-    from . import media_codecs as MC
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, fps, tags = [], [], []
-            for doc_id, b in zip(pdf[id_col], pdf["media"]):
-                ids.append(doc_id)
-                try:
-                    if not b or MC.sniff_format(bytes(b)) != "wav":
-                        raise ValueError("not a WAV payload")
-                    w = MC.decode_wav(bytes(b))
-                    fp = audio_fingerprint(w["samples"])
-                    fps.append(fp - (1 << 64) if fp >= (1 << 63) else fp)
-                    tags.append("afp-v1")
-                except ValueError:
-                    fps.append(None)
-                    tags.append("afp-v1-invalid")
-            yield pd.DataFrame(
-                {"doc_id": ids, "afp": pd.array(fps, dtype="Int64"),
-                 "decoder": tags}
-            )
+    def rows_of(b):
+        try:
+            if not b:
+                raise ValueError("not a WAV payload")
+            fp = audio_fingerprint(MC.decode_wav(bytes(b))["samples"])
+        except ValueError:
+            return [(None, "afp-v1-invalid")]
+        # the 64-bit value as a signed int64 (two's complement)
+        return [(fp - (1 << 64) if fp >= (1 << 63) else fp, "afp-v1")]
 
-    return media_df.mapInPandas(batches, "doc_id long, afp long, decoder string")
+    return _extract(media_df, id_col, rows_of, "doc_id long, afp long, decoder string")
 
 
 def dedup_audio_fingerprint(media_df: DataFrame,
@@ -856,19 +663,7 @@ def dedup_audio_fingerprint(media_df: DataFrame,
     cluster on the 64-bit value (the same recording at any gain
     collapses; min-id member is canonical). One shuffle on 8-byte
     fingerprints — audio bytes never shuffle."""
-    from pyspark.sql import Window
-
-    fps = extract_audio_fingerprint(media_df, id_col).filter(
-        F.col("afp").isNotNull()
-    )
-    # single decode pass: per-fingerprint rollup as a window over the
-    # 16-byte (id, fp) rows — same reasoning as dedup_image_phash
-    w = Window.partitionBy("afp")
-    return fps.select(
-        F.col("doc_id").alias(id_col),
-        F.count(F.lit(1)).over(w).alias("n_copies"),
-        (F.col("doc_id") == F.min("doc_id").over(w)).alias("is_canonical"),
-    )
+    return _hash_clusters(extract_audio_fingerprint(media_df, id_col), "afp", id_col)
 
 
 def synth_tone_sequences(docs: DataFrame, id_col: str) -> DataFrame:
@@ -880,36 +675,18 @@ def synth_tone_sequences(docs: DataFrame, id_col: str) -> DataFrame:
     varies with id (0.3 + (id mod 5)·0.1) across cluster members, so
     the oracle's arithmetic clusters hold only because the fingerprint
     really is gain-invariant."""
-    from . import media_codecs as MC
+    sr, n = 8000, 1024
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        sr, n = 8000, 1024
+    def payload(i):
+        a, amp = i % 8, 0.3 + (i % 5) * 0.1
         t = np.arange(n) / sr
-        cache: dict[tuple, bytes] = {}
-        for pdf in it:
-            payloads = []
-            for i in pdf[id_col]:
-                i = int(i)
-                a, amp_sel = i % 8, i % 5
-                payload = cache.get((a, amp_sel))
-                if payload is None:
-                    amp = 0.3 + amp_sel * 0.1
-                    chunks = []
-                    for k in range(8):
-                        f = 32 * (1 + (a + k) % 8) * sr / n
-                        s = np.sin(2 * np.pi * f * t) * amp
-                        chunks.append(
-                            np.clip(np.round(s * 127 + 128), 0, 255).astype(np.uint8)
-                        )
-                    payload = cache[(a, amp_sel)] = MC.encode_wav_pcm8(
-                        bytes(np.concatenate(chunks)), sr
-                    )
-                payloads.append(payload)
-            yield pd.DataFrame({"doc_id": pdf[id_col], "media": payloads})
+        chunks = []
+        for k in range(8):
+            s = np.sin(2 * np.pi * (32 * (1 + (a + k) % 8) * sr / n) * t) * amp
+            chunks.append(np.clip(np.round(s * 127 + 128), 0, 255).astype(np.uint8))
+        return MC.encode_wav_pcm8(bytes(np.concatenate(chunks)), sr)
 
-    return docs.select(id_col).mapInPandas(batches, "doc_id long, media binary")
+    return _synth(docs, id_col, payload, memo_key=lambda i: (i % 8, i % 5))
 
 
 def synth_mjpeg_textures(docs: DataFrame, id_col: str) -> DataFrame:
@@ -924,33 +701,17 @@ def synth_mjpeg_textures(docs: DataFrame, id_col: str) -> DataFrame:
     unit-quantization JPEG preserves exactly, so the decoded frames
     differ by exactly that shift and the pHash (which discards DC) is
     IDENTICAL across the cluster."""
-    from .jpeg import encode_jpeg
-    from .mp4 import encode_mjpeg_mp4
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def payload(i):
+        a, off = i % 10, 12 * ((i // 10) % 5)
+        frames = [
+            encode_jpeg(np.random.default_rng(a * 100 + k).integers(
+                0, 196, (16, 16, 1), dtype=np.uint8) + off)
+            for k in range(2)
+        ]
+        return encode_mjpeg_mp4(frames, width=16, height=16)
 
-        cache: dict[tuple, bytes] = {}
-        for pdf in it:
-            payloads = []
-            for i in pdf[id_col]:
-                i = int(i)
-                a, off = i % 10, 12 * ((i // 10) % 5)
-                payload = cache.get((a, off))
-                if payload is None:
-                    frames = []
-                    for k in range(2):
-                        tex = np.random.default_rng(a * 100 + k).integers(
-                            0, 196, (16, 16, 1), dtype=np.uint8
-                        )
-                        frames.append(encode_jpeg(tex + off))
-                    payload = cache[(a, off)] = encode_mjpeg_mp4(
-                        frames, width=16, height=16
-                    )
-                payloads.append(payload)
-            yield pd.DataFrame({"doc_id": pdf[id_col], "media": payloads})
-
-    return docs.select(id_col).mapInPandas(batches, "doc_id long, media binary")
+    return _synth(docs, id_col, payload, memo_key=lambda i: (i % 10, (i // 10) % 5))
 
 
 def dedup_video_phash(media_df: DataFrame, id_col: str = "doc_id",
@@ -962,51 +723,29 @@ def dedup_video_phash(media_df: DataFrame, id_col: str = "doc_id",
     brightness collapses (pHash discards DC). One shuffle of 8-byte
     hashes; video bytes never shuffle. Corrupt/opaque-codec payloads
     degrade per-row (null hash)."""
-    from pyspark.sql import Window
 
-    from .jpeg import decode_jpeg
-    from .mp4 import extract_video_samples
+    def rows_of(b):
+        if not b:  # NULL media: bytes(None) is TypeError, not ValueError
+            return [(None, "vphash-v1-empty")]
+        try:
+            out = extract_video_samples(bytes(b), max_samples=n_frames)
+            if out["format"] != "jpeg" or not out["samples"]:
+                raise ValueError("no decodable MJPEG frames")
+            h = 0
+            for k, s in enumerate(out["samples"]):
+                # rotate per frame so reordered frames differ;
+                # k mod 63 keeps the 63-bit rotation legal for
+                # any n_frames (63-k would go negative at k=64)
+                r = k % 63
+                fh = phash64(decode_jpeg(s)["pixels"])
+                h ^= ((fh << r) | (fh >> (63 - r))) & ((1 << 63) - 1)
+        except ValueError:
+            return [(None, "vphash-v1-invalid")]
+        return [(h, "vphash-v1")]
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, hashes, tags = [], [], []
-            for doc_id, b in zip(pdf[id_col], pdf["media"]):
-                ids.append(doc_id)
-                if not b:  # NULL media: bytes(None) is TypeError, not ValueError
-                    hashes.append(None)
-                    tags.append("vphash-v1-empty")
-                    continue
-                try:
-                    out = extract_video_samples(bytes(b), max_samples=n_frames)
-                    if out["format"] != "jpeg" or not out["samples"]:
-                        raise ValueError("no decodable MJPEG frames")
-                    h = 0
-                    for k, s in enumerate(out["samples"]):
-                        # rotate per frame so reordered frames differ;
-                        # k mod 63 keeps the 63-bit rotation legal for
-                        # any n_frames (63-k would go negative at k=64)
-                        r = k % 63
-                        fh = phash64(decode_jpeg(s)["pixels"])
-                        h ^= ((fh << r) | (fh >> (63 - r))) & ((1 << 63) - 1)
-                    hashes.append(h)
-                    tags.append("vphash-v1")
-                except ValueError:
-                    hashes.append(None)
-                    tags.append("vphash-v1-invalid")
-            yield pd.DataFrame(
-                {"doc_id": ids, "vphash": pd.array(hashes, dtype="Int64"),
-                 "decoder": tags}
-            )
-
-    hashes = media_df.mapInPandas(
-        batches, "doc_id long, vphash long, decoder string"
-    ).filter(F.col("vphash").isNotNull())
-    w = Window.partitionBy("vphash")
-    return hashes.select(
-        F.col("doc_id").alias(id_col),
-        F.count(F.lit(1)).over(w).alias("n_copies"),
-        (F.col("doc_id") == F.min("doc_id").over(w)).alias("is_canonical"),
-    )
+    hashes = _extract(media_df, id_col, rows_of,
+                      "doc_id long, vphash long, decoder string")
+    return _hash_clusters(hashes, "vphash", id_col)
 
 
 def synth_image_patterns(docs: DataFrame, id_col: str) -> DataFrame:
@@ -1018,27 +757,13 @@ def synth_image_patterns(docs: DataFrame, id_col: str) -> DataFrame:
     would NOT do here — pHash is contrast-invariant, so proportional
     patterns correctly collide). The cluster key is pure id arithmetic
     the SQL oracle recomputes without ever touching pixels."""
-    from . import media_codecs as MC
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def payload(i):
+        a, b = 1 + i % 13, 1 + (i // 13) % 5
+        g = np.random.default_rng(a * 1000 + b).integers(0, 256, (32, 32), dtype=np.uint8)
+        return MC.encode_ppm(g[:, :, None])
 
-        cache: dict[tuple, bytes] = {}
-        for pdf in it:
-            payloads = []
-            for i in pdf[id_col]:
-                i = int(i)
-                a, b = 1 + i % 13, 1 + (i // 13) % 5
-                payload = cache.get((a, b))
-                if payload is None:
-                    g = np.random.default_rng(a * 1000 + b).integers(
-                        0, 256, (32, 32), dtype=np.uint8
-                    )
-                    payload = cache[(a, b)] = MC.encode_ppm(g[:, :, None])
-                payloads.append(payload)
-            yield pd.DataFrame({"doc_id": pdf[id_col], "media": payloads})
-
-    return docs.select(id_col).mapInPandas(batches, "doc_id long, media binary")
+    return _synth(docs, id_col, payload, memo_key=lambda i: (i % 13, (i // 13) % 5))
 
 
 def synth_gif(docs: DataFrame, id_col: str) -> DataFrame:
@@ -1047,27 +772,12 @@ def synth_gif(docs: DataFrame, id_col: str) -> DataFrame:
     spans all 256 residues → decoded mean EXACTLY 127.5 — GIF is
     lossless so no flat-block restriction applies), height 2 + id % 3,
     odd ids interlaced so both raster paths decode under the oracle."""
-    from .gif import encode_gif
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        cache: dict[int, bytes] = {}
-        for pdf in it:
-            payloads = []
-            for i in pdf[id_col]:
-                i = int(i)
-                key = (i % 256) * 6 + (i % 3) * 2 + (i % 2)
-                payload = cache.get(key)
-                if payload is None:
-                    h = 2 + i % 3
-                    g = (np.arange(256)[None, :] + np.arange(h)[:, None] + i) % 256
-                    px = np.repeat(g[:, :, None], 3, axis=2).astype(np.uint8)
-                    payload = cache[key] = encode_gif(px, interlace=bool(i % 2))
-                payloads.append(payload)
-            yield pd.DataFrame({"doc_id": pdf[id_col], "media": payloads})
-
-    return docs.select(id_col).mapInPandas(batches, "doc_id long, media binary")
+    return _synth(
+        docs, id_col,
+        lambda i: encode_gif(np.repeat(_gradient(i, 2 + i % 3), 3, axis=2),
+                             interlace=bool(i % 2)),
+        memo_key=lambda i: (i % 256, i % 3, i % 2),
+    )
 
 
 def synth_gif_animated(docs: DataFrame, id_col: str,
@@ -1075,28 +785,13 @@ def synth_gif_animated(docs: DataFrame, id_col: str,
     """Animated-GIF fixtures: ``n_frames`` flat gray frames, frame k's
     value = (id + 37·k) % 256 — GIF is lossless so each composited
     frame's mean is exactly that value (arithmetic oracle per frame)."""
-    from .gif import encode_gif_animated
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        cache: dict[int, bytes] = {}
-        for pdf in it:
-            payloads = []
-            for i in pdf[id_col]:
-                i = int(i)
-                key = i % 256
-                payload = cache.get(key)
-                if payload is None:
-                    frames = [
-                        np.full((8, 16, 3), (i + 37 * k) % 256, np.uint8)
-                        for k in range(n_frames)
-                    ]
-                    payload = cache[key] = encode_gif_animated(frames)
-                payloads.append(payload)
-            yield pd.DataFrame({"doc_id": pdf[id_col], "media": payloads})
-
-    return docs.select(id_col).mapInPandas(batches, "doc_id long, media binary")
+    return _synth(
+        docs, id_col,
+        lambda i: encode_gif_animated(
+            [np.full((8, 16, 3), (i + 37 * k) % 256, np.uint8) for k in range(n_frames)]
+        ),
+        memo_key=lambda i: i % 256,
+    )
 
 
 def sample_gif_frames(media_df: DataFrame, max_frames: int = 4,
@@ -1107,36 +802,18 @@ def sample_gif_frames(media_df: DataFrame, max_frames: int = 4,
     (operators/gif.py) and emit its dimensions and mean pixel. Corrupt
     payloads degrade per-row to a single tagged row, never per-task.
     mapInPandas, zero shuffle, row-expanding UDTF shape."""
-    from .gif import decode_gif_frames
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, idxs, ws, hs, means, tags = [], [], [], [], [], []
-            for doc_id, payload in zip(pdf[id_col], pdf["media"]):
-                if payload is None:
-                    continue
-                try:
-                    d = decode_gif_frames(payload, max_frames=max_frames)
-                    for k, fr in enumerate(d["frames"]):
-                        ids.append(doc_id)
-                        idxs.append(k)
-                        ws.append(d["width"])
-                        hs.append(d["height"])
-                        means.append(float(fr.mean()))
-                        tags.append("gif-anim-v1")
-                except ValueError:
-                    ids.append(doc_id)
-                    idxs.append(0)
-                    ws.append(0)
-                    hs.append(0)
-                    means.append(-1.0)
-                    tags.append("gif-anim-v1-corrupt")
-            yield pd.DataFrame(
-                {"doc_id": ids, "frame_idx": idxs, "width": ws, "height": hs,
-                 "mean_pixel": means, "decoder": tags}
-            )
+    def rows_of(payload):
+        if payload is None:
+            return []
+        try:
+            d = decode_gif_frames(payload, max_frames=max_frames)
+        except ValueError:
+            return [(0, 0, 0, -1.0, "gif-anim-v1-corrupt")]
+        return [(k, d["width"], d["height"], float(fr.mean()), "gif-anim-v1")
+                for k, fr in enumerate(d["frames"])]
 
-    return media_df.mapInPandas(batches, FRAME_DECODE_SCHEMA)
+    return _extract(media_df, id_col, rows_of, FRAME_DECODE_SCHEMA)
 
 
 def synth_png(docs: DataFrame, id_col: str) -> DataFrame:
@@ -1147,22 +824,7 @@ def synth_png(docs: DataFrame, id_col: str) -> DataFrame:
     content (unlike a flat fill) makes the Sub/Up filter pipeline and
     the inflate+unfilter decode carry real information: any unfilter
     or palette bug shifts the mean."""
-    from .png import encode_png
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in it:
-            payloads = []
-            for i in pdf[id_col]:
-                i = int(i)
-                h = 2 + i % 3
-                yy, xx = np.mgrid[0:h, 0:256]
-                px = ((xx + yy + i) % 256).astype(np.uint8)[:, :, None]
-                payloads.append(encode_png(px))
-            yield pd.DataFrame({"doc_id": pdf[id_col], "media": payloads})
-
-    return docs.select(id_col).mapInPandas(batches, "doc_id long, media binary")
+    return _synth(docs, id_col, lambda i: encode_png(_gradient(i, 2 + i % 3)))
 
 
 def synth_bmp(docs: DataFrame, id_col: str) -> DataFrame:
@@ -1173,22 +835,7 @@ def synth_bmp(docs: DataFrame, id_col: str) -> DataFrame:
     an arithmetic oracle that any palette, stride-padding, or row-order
     bug shifts (bottom-up flip errors change WHICH rows hold which
     values, caught because height varies with id)."""
-    from .bmp import encode_bmp
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in it:
-            payloads = []
-            for i in pdf[id_col]:
-                i = int(i)
-                h = 2 + i % 3
-                yy, xx = np.mgrid[0:h, 0:256]
-                px = ((xx + yy + i) % 256).astype(np.uint8)[:, :, None]
-                payloads.append(encode_bmp(px))
-            yield pd.DataFrame({"doc_id": pdf[id_col], "media": payloads})
-
-    return docs.select(id_col).mapInPandas(batches, "doc_id long, media binary")
+    return _synth(docs, id_col, lambda i: encode_bmp(_gradient(i, 2 + i % 3)))
 
 
 def extract_image_meta(media_df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -1197,51 +844,12 @@ def extract_image_meta(media_df: DataFrame, id_col: str = "doc_id") -> DataFrame
     unfilter, operators/png.py) and emit its parsed metadata plus the
     decoded mean pixel value. Raises on other payloads: this operator
     IS the image-decode proof, silent fallback would defeat it."""
-    from . import media_codecs as MC
-    from .jpeg import decode_jpeg
-    from .png import decode_png
 
-    def one(b: bytes) -> tuple[int, int, int, float, str]:
-        kind = MC.sniff_format(b)
-        if kind == "ppm":
-            p = MC.decode_ppm(b)
-            return (p["width"], p["height"], p["channels"],
-                    float(p["pixels"].mean()), "ppm-v1")
-        if kind == "png":
-            p = decode_png(b)
-            return (p["width"], p["height"], p["channels"],
-                    float(p["pixels"].mean()), "png-v1")
-        if kind == "gif":
-            from .gif import decode_gif
+    def rows_of(b):
+        d, _, tag = _decode_image(b)
+        return [(d["width"], d["height"], d["channels"], float(d["pixels"].mean()), tag)]
 
-            g = decode_gif(b)
-            return (g["width"], g["height"], g["channels"],
-                    float(g["pixels"].mean()), "gif-v1")
-        if kind == "bmp":
-            from .bmp import decode_bmp
-
-            d = decode_bmp(b)
-            return (d["width"], d["height"], d["channels"],
-                    float(d["pixels"].mean()), "bmp-v1")
-        j = decode_jpeg(b)
-        return (j["width"], j["height"], j["channels"],
-                float(j["pixels"].mean()), f"jpeg-{j['mode']}-v1")
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = [one(b) for b in pdf["media"]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col],
-                    "width": [r[0] for r in rows],
-                    "height": [r[1] for r in rows],
-                    "channels": [r[2] for r in rows],
-                    "mean_pixel": [r[3] for r in rows],
-                    "decoder": [r[4] for r in rows],
-                }
-            )
-
-    return media_df.mapInPandas(batches, IMAGE_META_SCHEMA)
+    return _extract(media_df, id_col, rows_of, IMAGE_META_SCHEMA)
 
 
 def extract_features(media_df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -1249,20 +857,11 @@ def extract_features(media_df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     in, feature rows out. One Python worker per partition, zero
     shuffle. WAV/PPM payloads decode for real; see ``_decode``."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            feats = pdf["media"].map(_decode)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col],
-                    "n_bytes": [f["n_bytes"] for f in feats],
-                    "fake_mean": [f["fake_mean"] for f in feats],
-                    "fake_first": [f["fake_first"] for f in feats],
-                    "decoder": [f["decoder"] for f in feats],
-                }
-            )
+    def rows_of(b):
+        f = _decode(b)
+        return [(f["n_bytes"], f["fake_mean"], f["fake_first"], f["decoder"])]
 
-    return media_df.mapInPandas(batches, FEATURE_SCHEMA)
+    return _extract(media_df, id_col, rows_of, FEATURE_SCHEMA)
 
 
 FRAME_DECODE_SCHEMA = (
@@ -1278,35 +877,21 @@ def synth_mjpeg_mp4(docs: DataFrame, id_col: str) -> DataFrame:
     flat frame decodes bit-exactly, so the full container walk →
     sample extraction → T.81 decode chain has an arithmetic SQL
     oracle."""
-    from .jpeg import encode_jpeg
-    from .mp4 import encode_mjpeg_mp4
+    # all frames are flat 16×8 grays: at most 256 distinct coded frames
+    # exist, so each worker memoizes the encoder per FRAME (its own copy
+    # of this dict arrives with the task). Payloads are not memoized:
+    # the container write is cheap, and a per-payload memo keyed on
+    # id % 256 encodes more frames.
+    frames: dict[int, bytes] = {}
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def frame(v: int) -> bytes:
+        if v not in frames:
+            frames[v] = encode_jpeg(np.full((8, 16, 1), v, dtype=np.uint8))
+        return frames[v]
 
-        # all frames are flat 16×8 grays: at most 256 distinct coded
-        # frames exist, so memoize the pure-Python encoder per worker.
-        # The sample-table walk + per-frame decode under test still
-        # run on every row.
-        frame_cache: dict[int, bytes] = {}
-
-        def frame(v: int) -> bytes:
-            f = frame_cache.get(v)
-            if f is None:
-                f = frame_cache[v] = encode_jpeg(
-                    np.full((8, 16, 1), v, dtype=np.uint8)
-                )
-            return f
-
-        for pdf in it:
-            payloads = []
-            for i in pdf[id_col]:
-                i = int(i)
-                frames = [frame((i * 31 + 17 * k) % 256) for k in range(1 + i % 4)]
-                payloads.append(encode_mjpeg_mp4(frames, width=16, height=8))
-            yield pd.DataFrame({"doc_id": pdf[id_col], "media": payloads})
-
-    return docs.select(id_col).mapInPandas(batches, "doc_id long, media binary")
+    return _synth(docs, id_col, lambda i: encode_mjpeg_mp4(
+        [frame((i * 31 + 17 * k) % 256) for k in range(1 + i % 4)], width=16, height=8
+    ))
 
 
 def sample_video_frames(media_df: DataFrame, max_frames: int = 4,
@@ -1326,42 +911,22 @@ def sample_video_frames(media_df: DataFrame, max_frames: int = 4,
 
     mapInPandas, zero shuffle; one payload row fans out to ≤max_frames
     frame rows (the row-expanding UDTF shape)."""
-    from .jpeg import decode_jpeg
-    from .mp4 import extract_video_samples
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, idxs, ws, hs, means, tags = [], [], [], [], [], []
-            for doc_id, payload in zip(pdf[id_col], pdf["media"]):
-                if payload is None:
-                    continue
-                out = extract_video_samples(payload, max_samples=max_frames)
-                for k, sample in enumerate(out["samples"]):
-                    if out["format"] == "jpeg":
-                        try:
-                            d = decode_jpeg(sample)
-                            w, h = d["width"], d["height"]
-                            mean = float(d["pixels"].mean())
-                            tag = "mp4-mjpeg-v1"
-                        except ValueError:
-                            w = h = 0
-                            mean = -1.0
-                            tag = "mp4-mjpeg-v1-corrupt"
-                    else:
-                        # container-true dims from the track header;
-                        # the bitstream itself stays opaque (no codec)
-                        w, h = out["width"], out["height"]
-                        mean = -1.0
-                        tag = f"mp4-opaque-{out['format']}"
-                    ids.append(doc_id)
-                    idxs.append(k)
-                    ws.append(w)
-                    hs.append(h)
-                    means.append(mean)
-                    tags.append(tag)
-            yield pd.DataFrame(
-                {"doc_id": ids, "frame_idx": idxs, "width": ws, "height": hs,
-                 "mean_pixel": means, "decoder": tags}
-            )
+    def frame_row(out, k, sample):
+        if out["format"] != "jpeg":
+            # container-true dims from the track header;
+            # the bitstream itself stays opaque (no codec)
+            return k, out["width"], out["height"], -1.0, f"mp4-opaque-{out['format']}"
+        try:
+            d = decode_jpeg(sample)
+        except ValueError:
+            return k, 0, 0, -1.0, "mp4-mjpeg-v1-corrupt"
+        return k, d["width"], d["height"], float(d["pixels"].mean()), "mp4-mjpeg-v1"
 
-    return media_df.mapInPandas(batches, FRAME_DECODE_SCHEMA)
+    def rows_of(payload):
+        if payload is None:
+            return []
+        out = extract_video_samples(payload, max_samples=max_frames)
+        return [frame_row(out, k, s) for k, s in enumerate(out["samples"])]
+
+    return _extract(media_df, id_col, rows_of, FRAME_DECODE_SCHEMA)

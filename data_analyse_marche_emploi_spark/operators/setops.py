@@ -2,9 +2,10 @@
 
 The reference's only set-shaped computation is the *implicit dedup-union*
 of overlapping partitioned scans merged by the keyed bulk upsert
-(ingestion-elasticsearch.py:36-55). The engine exposes the full set:
-UNION (dedup), UNION ALL, INTERSECT, EXCEPT — all shuffle on the full
-row; at scale prefer key-based semi/anti joins when only a key matters.
+(ingestion-elasticsearch.py:36-55). The catalog's set entries call the
+DataFrame methods (``subtract``; ``intersect`` via this helper): all shuffle
+on the full row; at scale prefer key-based semi/anti joins when only a
+key matters.
 """
 
 from __future__ import annotations
@@ -12,18 +13,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 
-def union_dedup(a: DataFrame, b: DataFrame) -> DataFrame:
-    """UNION (distinct) — the reference's upsert-merge semantics."""
-    return a.unionAll(b).distinct()
-
-
-def union_all(a: DataFrame, b: DataFrame) -> DataFrame:
-    return a.unionAll(b)
-
-
 def intersect(a: DataFrame, b: DataFrame) -> DataFrame:
     return a.intersect(b)
 
-
-def except_(a: DataFrame, b: DataFrame) -> DataFrame:
-    return a.exceptAll(b)

@@ -1,4 +1,4 @@
-"""Window-function operators — ranking, running totals, sessionization.
+"""Window-function operators — trailing stats, EWMA, sessionization.
 
 Absent from the reference (SURVEY.md §2.D "absent" list) but part of the
 engine's first-class analytic surface; Kibana-style "top N per group"
@@ -12,25 +12,8 @@ so choose partition keys with bounded group size (here: supplier, user).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-
-
-def topk_per_group(df: DataFrame, part: str, order: Column, k: int) -> DataFrame:
-    """Top-k rows per group via row_number — the distributed top-N
-    pattern (one shuffle on the group key, per-group in-memory sort)."""
-    w = Window.partitionBy(part).orderBy(order)
-    return df.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= k)
-
-
-def running_sum(df: DataFrame, part: str, order: str, val: Column, alias: str) -> DataFrame:
-    """Cumulative sum within group, ordered — rows-frame window."""
-    w = (
-        Window.partitionBy(part)
-        .orderBy(order)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    return df.withColumn(alias, F.sum(val).over(w))
 
 
 def trailing_range_stats(

@@ -1991,13 +1991,15 @@ class TxTable:
             revalidate=lambda: self._enforce_constraints(df, "append"),
         )
 
-    def _constraints_added_in(self, after: int, before: int) -> list[int]:
+    def _constraints_added_in(self, after: int, before: int,
+                              names: list[str] | None = None) -> list[int]:
         """Versions in ``(after, before)`` that committed a NEW CHECK
         constraint — the one commit kind that makes an already-done
-        row validation stale (drops can only relax)."""
+        row validation stale (drops can only relax). ``names`` is a
+        log-dir listing the caller already holds."""
         return [
             w
-            for w in self._versions()
+            for w in self._versions(names)
             if after < w < before
             and self._read_action(w)["op"] == "add-constraint"
         ]
@@ -3897,7 +3899,8 @@ class TxLogBatchWriter(DataSourceArrowWriter):
         # The schema check and the partition columns below read the
         # same bound state (genesis when no table exists yet).
         t = TxTable(None, self.path)
-        s = t._snapshot() if t._versions() else _TableState()
+        names = t.log_store.list_log(t.log_dir)
+        s = t._snapshot(names=names) if t._versions(names) else _TableState()
         self._bound_version = s.version
         self._constraints = s.constraints
         # Manual idempotence (the public formats' txnAppId/txnVersion
@@ -4089,40 +4092,48 @@ class TxLogBatchWriter(DataSourceArrowWriter):
         idempotence pair, or the stream sink's epoch."""
         adds = [f for m in messages if m is not None for f in m.files]
         t = TxTable(None, self.path)
-        if txn is not None and t._versions():
-            last = t.txns().get(txn[0])
-            if last is not None and txn[1] <= last:
-                # already-committed txn (a retried job or a replayed
-                # epoch): land nothing, drop the restaged parts rather
-                # than leave them for vacuum
-                self.abort(messages)
-                return
-        # partition values collected from the tasks ride into
-        # _file_stats exactly as TxTable._write_parts' staged values do
-        for m in messages:
-            if m is not None:
-                t._last_partition_values.update(getattr(m, "values", {}))
-        # Metadata-only work from here on: _file_stats reads parquet
-        # FOOTERS, the log walk reads JSON. Row validation already
-        # happened inside each task's write(); if it raced an
-        # add-constraint commit, fail loudly (no session here to
-        # re-validate with) rather than land rows the new constraint
-        # never saw. Any failure below aborts first, so uncommitted
-        # parts never leak into the table root (r8 advisor finding).
-        txn_extra = (
-            {"txn": {"app": txn[0], "batch": txn[1]}}
-            if txn is not None
-            else {}
-        )
+        # Any failure from here on aborts first, so uncommitted parts
+        # never leak into the table root (r8 advisor finding).
         try:
-            if not t._versions():
+            # one listing and one replay serve the txn check, the
+            # create-vs-append test, the partition columns _file_stats
+            # reads and the overwrite's removes; the commit itself lists
+            # once more (_commit's protocol guard)
+            names = t.log_store.list_log(t.log_dir)
+            vs = t._versions(names)
+            s = t._snapshot(names=names) if vs else None
+            if txn is not None and s is not None:
+                last = s.txns.get(txn[0])
+                if last is not None and txn[1] <= last:
+                    # already-committed txn (a retried job or a replayed
+                    # epoch): land nothing, drop the restaged parts rather
+                    # than leave them for vacuum
+                    self.abort(messages)
+                    return
+            # partition values collected from the tasks ride into
+            # _file_stats exactly as TxTable._write_parts' staged values do
+            for m in messages:
+                if m is not None:
+                    t._last_partition_values.update(getattr(m, "values", {}))
+            # Metadata-only work from here on: _file_stats reads parquet
+            # FOOTERS, the log walk reads JSON. Row validation already
+            # happened inside each task's write(); if it raced an
+            # add-constraint commit, fail loudly (no session here to
+            # re-validate with) rather than land rows the new constraint
+            # never saw.
+            txn_extra = (
+                {"txn": {"app": txn[0], "batch": txn[1]}}
+                if txn is not None
+                else {}
+            )
+            if not vs:
                 os.makedirs(self.path, exist_ok=True)
                 t._commit(0, adds, [], "create", stats=t._file_stats(adds),
                           extra={"partition_by": list(self._pcols),
                                  **txn_extra})
             elif self.overwrite:
-                v = t.latest_version() + 1
-                news = t._constraints_added_in(self._bound_version, v)
+                v = vs[-1] + 1
+                news = t._constraints_added_in(self._bound_version, v, names)
                 if news:
                     raise ValueError(
                         f"write.format('txlog') raced add-constraint "
@@ -4130,7 +4141,6 @@ class TxLogBatchWriter(DataSourceArrowWriter):
                         "constraint set — no commit was made, re-run "
                         "the save"
                     )
-                s = t._snapshot(v - 1)
                 removes = s.files + [f for f, _, _ in s.deletes]
                 t._commit(v, adds, removes, "overwrite",
                           stats=t._file_stats(adds),

@@ -24,6 +24,8 @@ from data_analyse_marche_emploi_spark.sources.txlog import (
     InMemoryFileStore,
     PosixFileStore,
     PosixLogStore,
+    TxLogBatchWriter,
+    TxLogStreamWriter,
     TxTable,
     _parquet_read_schema,
     register_txlog_source,
@@ -375,6 +377,53 @@ def test_txlog_op_replay_budget(spark, tmp_path):
         lists[name] = store.lists - before[1]
     assert reads == REPLAY_BUDGET
     assert lists == LIST_BUDGET
+
+
+# log-dir listings of the DSv2 writers (``df.write.format("txlog")``
+# and the stream sink): one at plan time for the bound snapshot, two per
+# commit — one listing serves the txn check and the create-vs-append
+# test, and _commit's protocol guard takes the other. A budget may go
+# down, never up.
+WRITER_LIST_BUDGET = {"init": 1, "append": 2, "txn_append": 2,
+                      "stream_commit": 2, "overwrite": 2}
+
+
+def test_txlog_writer_list_budget(spark, tmp_path, monkeypatch):
+    """The registered writers, driven in-process on a one-file table,
+    list the log no more often than ``WRITER_LIST_BUDGET``, and every
+    commit still lands."""
+    p = str(tmp_path / "t")
+    TxTable.create(spark, p, spark.range(3).select(F.col("id").alias("k")).coalesce(1))
+    schema = spark.range(1).select(F.col("id").alias("k")).schema
+    lists = []
+    list_log = PosixLogStore.list_log
+
+    def counting(self, log_dir):
+        lists.append(log_dir)
+        return list_log(self, log_dir)
+
+    monkeypatch.setattr(PosixLogStore, "list_log", counting)
+
+    def listed(fn):
+        before = len(lists)
+        out = fn()
+        return out, len(lists) - before
+
+    def commit(writer, k, *epoch):
+        msg = writer.write(iter([pa.record_batch({"k": pa.array([k], pa.int64())})]))
+        return listed(lambda: writer.commit([msg], *epoch))[1]
+
+    w, n_init = listed(lambda: TxLogBatchWriter({"path": p}, False, schema))
+    counts = {"init": n_init, "append": commit(w, 7)}
+    counts["txn_append"] = commit(TxLogBatchWriter(
+        {"path": p, "txnappid": "job", "txnversion": "1"}, False, schema), 8)
+    counts["stream_commit"] = commit(
+        TxLogStreamWriter({"path": p, "txnappid": "sink"}, schema), 9, 0)
+    counts["overwrite"] = commit(TxLogBatchWriter({"path": p}, True, schema), 10)
+    assert counts == WRITER_LIST_BUDGET
+    t = TxTable(spark, p)
+    assert t.txns() == {"job": 1, "sink": 0}
+    assert [r.k for r in t.read().collect()] == [10]
 
 
 def _parquet_relations(df) -> int:
